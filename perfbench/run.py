@@ -1,6 +1,6 @@
 """KG-construction benchmark: one workload and one seed per process.
 
-    python3 perfbench/run.py --workload batch_shared --seed 1 --seconds 9 --trace 0
+    python3 perfbench/run.py --workload batch_shared --seed 1 --seconds 16 --trace 0
 
 Run from the repository root. The run sizes a ``local[nproc]`` session to the
 machine, loads the workload's seeded input (generated once and cached under
@@ -26,7 +26,6 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 ENGINE = "openie_with_entities_spark"
-WARM_GAIN = 0.03  # warm-up stops once a pass is not this much faster than the last
 STEAL_ARGS = dict(n=1_000_000, waves=1, repeats=2)
 
 
@@ -48,14 +47,6 @@ def driver_mem_mb(mem_total_mb: int) -> int:
     # an eighth of the machine, within [1 GiB, 4 GiB]: the inputs are small,
     # and the box may be shared
     return max(1024, min(4096, mem_total_mb // 8))
-
-
-def cpu_busy_s() -> float:
-    """CPU time the machine spent busy, in seconds: user + system + interrupts
-    over all cores from /proc/stat. Time stolen by the host is not counted."""
-    with open("/proc/stat") as f:
-        user, nice, system, _idle, _iowait, irq, softirq = map(int, f.readline().split()[1:8])
-    return (user + nice + system + irq + softirq) / os.sysconf("SC_CLK_TCK")
 
 
 def median(xs):
@@ -123,7 +114,7 @@ def run(args, wl, cores: int, mem_mb: int, state: str, workdir: str) -> int:
         })
 
     from openie_with_entities_spark.session import get_spark
-    from perfbench.tracing import MemoryPeaks, descendants, jvm_pid, wait_gone
+    from perfbench.tracing import MemoryPeaks, descendants, jvm_pid, tree_cpu_s, wait_gone
 
     t = time.perf_counter()
     spark = get_spark("perfbench", cores=cores, extra_conf=conf)
@@ -140,20 +131,15 @@ def run(args, wl, cores: int, mem_mb: int, state: str, workdir: str) -> int:
             wl.load()
             loads.append(time.perf_counter() - t)
         warm = []
-        if wl.warm_up:
+        for _ in range(wl.untimed_passes):
             warm.append(attempt(wl, traced=False))
             mem.sample()
-            while len(warm) <= wl.max_warm:
-                warm.append(attempt(wl, traced=False))
-                mem.sample()
-                if warm[-1].wall_s > warm[-2].wall_s * (1 - WARM_GAIN):
-                    break
         setup_s = session_s + median(loads) + (warm[0].wall_s if warm else 0.0)
         t_timed = time.perf_counter()
         while True:
-            c0 = cpu_busy_s()
+            c0 = tree_cpu_s(gateway.proc.pid)
             passes.append(attempt(wl, traced=bool(args.trace)))
-            passes[-1].cpu_s = cpu_busy_s() - c0
+            passes[-1].cpu_s = tree_cpu_s(gateway.proc.pid) - c0
             mem.sample()
             if time.perf_counter() - t_timed >= args.seconds:
                 break
@@ -186,6 +172,8 @@ def run(args, wl, cores: int, mem_mb: int, state: str, workdir: str) -> int:
     print(f"steal after:  {steal_after}")
     print(f"setup: session {session_s:.2f} s, loads {[round(x, 2) for x in loads]} s, "
           f"cold and warm-up passes {[round(p.wall_s, 2) for p in warm]} s")
+    print(f"timed passes: wall {[round(p.wall_s, 2) for p in passes]} s, "
+          f"cpu {[round(p.cpu_s, 2) for p in passes]} s")
     for e in warm_errors + [e for p in passes for e in p.errors]:
         print(f"CHECK FAILED: {e}")
 

@@ -13,7 +13,8 @@ Sources, all of which exist without touching the engine:
   public ``backend=`` parameter of ``build_kg_fused``;
 * a single-thread driver replay of the decode functions over a fixed sample
   of the workload's sentences;
-* ``/proc`` for the peak resident memory of the JVM and the Python workers.
+* ``/proc`` for the peak resident memory of the JVM and the Python workers,
+  and for the CPU time of the benchmark's process tree.
 """
 
 from __future__ import annotations
@@ -93,6 +94,27 @@ def wait_gone(pids: list[int], timeout_s: float = 30.0) -> None:
             os.kill(p, 9)
         except ProcessLookupError:
             pass
+
+
+def _cpu_s(pid: int) -> float:
+    """utime + stime of a process and of its children it has waited for."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:  # the process ended between listing and reading
+        return 0.0
+    return sum(map(int, fields[11:15])) / os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s(launcher_pid: int) -> float:
+    """CPU seconds spent so far by this process, the Spark launcher and the
+    JVM under it, and the Python daemon and workers under the JVM.
+
+    A worker that exits is counted in its parent's children time once it is
+    waited for; the daemon waits for its workers, and reuses them."""
+    t = os.times()
+    own = t.user + t.system + t.children_user + t.children_system
+    return own + sum(_cpu_s(p) for p in [launcher_pid] + descendants(launcher_pid))
 
 
 class MemoryPeaks:
