@@ -18,10 +18,22 @@ same string, are one node cluster.
   * ``localCheckpoint`` truncates the lineage each round (without it the
     plan doubles per iteration and the driver OOMs long before 100 TB);
   * convergence is a cheap (count, hash-sum) checksum of the edge set.
+
+Production needs no fixpoint. Its only edges are alias links, and
+``linking._best_alias_per_surface`` maps each surface to exactly one KB
+entity, so the graph is a forest of stars, one KB entity per component, and
+every canonical id equals its entity id. ``entity_nodes`` builds that table
+directly from the distinct argument texts. ``canonicalize`` still applies
+once the edge set is not a function of the surface, e.g. similarity edges
+between near-duplicate surfaces, which can join two KB entities into one
+component.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -163,6 +175,53 @@ def build_entity_edges(linked_mentions: DataFrame) -> DataFrame:
         F.concat(F.lit("s:"), "surface_norm").alias("src"),
         F.concat(F.lit("e:"), "entity_id").alias("dst"),
     ).distinct()
+
+
+def entity_nodes(triples: DataFrame, alias: DataFrame) -> DataFrame:
+    """The ``entity_nodes`` table of :func:`canonicalize` over
+    ``link_mentions(detect_mentions(triples), alias)``, without the mention
+    table or the fixpoint: one (canonical_id, member, is_kb_entity) row per
+    linked surface (``s:``) and per linked KB entity (``e:``), where the
+    canonical id is the entity id (the star forest, module note).
+
+    Every dictionary mention counts, not only the first of its argument.
+    The NER runs once per distinct argument text, in one ``mapInPandas``;
+    its distinct surfaces meet the broadcast dictionary, and one explode
+    emits both rows of a match."""
+    from .extract.mentions import _spans, normalize_surface
+    from .linking import _best_alias_per_surface
+
+    def surfaces(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            found: set[str] = set()
+            for text in pdf["text"]:
+                tokens = text.split()
+                found.update(
+                    normalize_surface(" ".join(tokens[s : e + 1]))
+                    for s, e in _spans(tokens)
+                )
+            yield pd.DataFrame({"surface_norm": list(found)}, dtype=object)
+
+    texts = triples.select(F.explode(F.array("arg1", "arg2")).alias("text"))
+    best = _best_alias_per_surface(alias).select(
+        F.col("surface_form").alias("surface_norm"), "entity_id"
+    )
+    linked = (
+        texts.distinct()
+        .mapInPandas(surfaces, schema="surface_norm string")
+        .distinct()
+        .join(F.broadcast(best), "surface_norm")
+    )
+
+    def node(prefix: str, col: str, is_kb: bool):
+        return F.struct(
+            F.col("entity_id").alias("canonical_id"),
+            F.concat(F.lit(prefix), col).alias("member"),
+            F.lit(is_kb).alias("is_kb_entity"),
+        )
+
+    both = F.array(node("s:", "surface_norm", False), node("e:", "entity_id", True))
+    return linked.select(F.explode(both).alias("n")).select("n.*").distinct()
 
 
 def materialize_graph(linked_triples: DataFrame) -> DataFrame:

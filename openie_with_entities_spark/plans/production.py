@@ -6,9 +6,15 @@ Stage graph (each stage = one checkpointed parquet table + lineage rows;
 a rerun reprocesses only buckets without lineage):
 
     transcripts ─► triples (fused extract + inline link)  [ckpt: triples]
-        ├────────► entity_nodes (connected components)    [ckpt: entity_nodes]
+        ├────────► entity_nodes (linked surfaces and      [ckpt: entity_nodes]
+        │          their KB entities)
+        ├────────► graph_edges (weighted entity edges)    [ckpt: graph_edges]
         └────────► metrics (violation counters c1-c4 +    [ckpt: metrics]
                    per-stage row counts)
+
+entity_nodes needs no connected-components fixpoint: each component is a
+star around one KB entity (canonicalize.py module note), so the canonical
+id is the entity id and the triples keep the ids read from the checkpoint.
 """
 
 from __future__ import annotations
@@ -19,12 +25,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..canonicalize import canonicalize
+from ..canonicalize import entity_nodes, materialize_graph
 from ..extract.fused import fused_extract_stage
 from ..extract.mentions import detect_mentions
 from ..linking import (
     dictionary_surfaces,
-    link_mentions,
     link_triples_inline,
     violation_counters,
 )
@@ -57,10 +62,6 @@ def run_production(
     salted shuffle join — the hot-entity skew path)."""
     mgr = CheckpointManager(spark, out_dir, n_buckets=n_buckets)
     counters = StageCounters(spark, "fused_extract", FUSED_COUNTERS)
-    # the driver-side surface collect happens ONLY on the inline
-    # (broadcast-regime) path — salted mode exists precisely because the
-    # dictionary is too big to collect/broadcast
-    surfaces = None if link_mode == "salted" else dictionary_surfaces(alias)
 
     def extract(pending: DataFrame) -> DataFrame:
         if link_mode == "salted":
@@ -72,6 +73,11 @@ def run_production(
                 detect_mentions(res.triples), alias, n_salt=n_salt
             )
             return link_triples(res.triples, linked_m)
+        # the driver-side surface collect happens ONLY on the inline
+        # (broadcast-regime) path — salted mode exists precisely because the
+        # dictionary is too big to collect/broadcast — and only when a bucket
+        # is pending, so a fully resumed run submits no linking job
+        surfaces = dictionary_surfaces(alias)
         return link_triples_inline(
             fused_extract_stage(
                 pending, surfaces, partitions=partitions, counters=counters
@@ -82,50 +88,11 @@ def run_production(
     run = mgr.run_stage("triples", transcripts, extract)
     triples = run.output
 
-    # canonicalization runs over the full (checkpointed) triples table; its
-    # edge set is dictionary-bounded, so it is NOT bucket-checkpointed —
-    # it's a cheap global fixpoint re-run on resume.
-    mentions = detect_mentions(triples)
-    linked_mentions = link_mentions(mentions, alias)
-    entity_nodes, _ = canonicalize(triples, linked_mentions)
+    # entity_nodes and the graph are re-derived from the full checkpointed
+    # triples on every run, resumes included: both are dictionary- or
+    # entity-pair-bounded, so they are not bucket-checkpointed.
     entity_path = os.path.join(out_dir, "entity_nodes")
-    entity_nodes.write.mode("overwrite").parquet(entity_path)
-    entity_nodes = spark.read.parquet(entity_path)
-
-    # rewrite triple args to canonical cluster ids: KB entity id → its
-    # cluster's canonical id via a broadcast map (dictionary-bounded)
-    kb_to_canon = {
-        r.entity_id: r.canonical_id
-        for r in entity_nodes.where(F.col("is_kb_entity"))
-        .select(F.expr("substring(member, 3)").alias("entity_id"), "canonical_id")
-        .collect()
-    }
-    if kb_to_canon:
-        # dictionary-bounded → map literal (same regime as the link stage);
-        # also keeps the returned plan independent of the entity_nodes
-        # files, which the next resume run overwrites
-        entries: list = []
-        for k, v in sorted(kb_to_canon.items()):
-            entries += [F.lit(k), F.lit(v)]
-        cmap = F.create_map(*entries)
-        triples = triples.withColumn(
-            "arg1_entity_id",
-            F.coalesce(
-                F.try_element_at(cmap, F.col("arg1_entity_id")),
-                F.col("arg1_entity_id"),
-            ),
-        ).withColumn(
-            "arg2_entity_id",
-            F.coalesce(
-                F.try_element_at(cmap, F.col("arg2_entity_id")),
-                F.col("arg2_entity_id"),
-            ),
-        )
-
-    # graph materialization: the aggregated weighted edge table over the
-    # CANONICAL entity ids (one row per entity pair + predicate) — cheap
-    # re-derivation on resume, same policy as entity_nodes
-    from ..canonicalize import materialize_graph
+    entity_nodes(triples, alias).write.mode("overwrite").parquet(entity_path)
 
     graph_path = os.path.join(out_dir, "graph_edges")
     metrics_path = os.path.join(out_dir, "metrics")

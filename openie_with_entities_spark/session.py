@@ -19,6 +19,19 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS = 4096
 
 
+def driver_memory(total_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: $SPARK_DRIVER_MEM, else a quarter of the
+    machine's memory (``total_bytes``, default the physical RAM), at least
+    1g and at most 48g. In local mode this one JVM holds every executor,
+    so a fixed 48g default let the heap outgrow a small machine and get the
+    JVM OOM-killed instead of garbage-collected."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(total_bytes // 4 >> 20, 1024), 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "openie_with_entities_spark",
     cores: int | None = None,
@@ -51,7 +64,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

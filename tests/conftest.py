@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from openie_with_entities_spark.session import get_spark
@@ -14,11 +16,12 @@ def steal_ratio():
     """Host-steal ratio for steal-aware wall-clock bounds (the sandbox VM
     sees bursts of 2-3x host steal with zero local load — see
     openie_with_entities_spark/noise.py).  Quick reading (~2-4s, once per
-    session): 1 wave of 32 half-size busy-loops.  Correctness assertions
-    must NEVER depend on this — only timing bounds scale with it."""
+    session): 1 wave of one half-size busy-loop per core, so the probe
+    measures steal, not oversubscription.  Correctness assertions must
+    NEVER depend on this — only timing bounds scale with it."""
     from openie_with_entities_spark.noise import measure_steal
 
-    r = measure_steal(n=2_000_000, procs=32, waves=1, repeats=2)
+    r = measure_steal(n=2_000_000, procs=os.cpu_count() or 1, waves=1, repeats=2)
     print(f"\n[steal probe] {r}")
     return r.ratio
 

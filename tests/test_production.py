@@ -1,12 +1,28 @@
 """End-to-end production runner: checkpointed stages + resume semantics."""
 
+import re
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
+from openie_with_entities_spark.canonicalize import (
+    canonicalize,
+    entity_nodes,
+    materialize_graph,
+)
 from openie_with_entities_spark.corpus import alias_dict, generate_transcripts
+from openie_with_entities_spark.extract.mentions import detect_mentions
+from openie_with_entities_spark.linking import link_mentions, violation_counters
+from openie_with_entities_spark.plans import production
 from openie_with_entities_spark.plans.production import run_production
 
 
-def test_production_run_and_resume(spark, tmp_path):
+def _rows(df) -> Counter:
+    return Counter(map(tuple, df.collect()))
+
+
+def test_production_run_and_resume(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "kg")
     t = generate_transcripts(spark, 30).cache()
     t.count()
@@ -37,16 +53,97 @@ def test_production_run_and_resume(spark, tmp_path):
         .collect()
     }
     assert used and used <= canon_ids
+    nodes1 = _rows(r1.entity_nodes)
 
     # resume: nothing recomputed, outputs stable. (r1's entity_nodes /
     # metrics handles go stale here — overwrite-in-place outputs — so all
     # r1 reads happen above; production reruns hand out fresh handles.)
+    # With every bucket skipped, the dictionary is never collected.
+    def no_collect(alias):
+        raise AssertionError("dictionary collected on a fully resumed run")
+
+    monkeypatch.setattr(production, "dictionary_surfaces", no_collect)
     r2 = run_production(spark, t, alias, out, n_buckets=8)
     assert r2.buckets_processed == 0 and r2.buckets_skipped == 8
     assert r2.triples.count() == n_triples
-    assert r2.entity_nodes.count() == len(
-        canon_ids
-    ) or r2.entity_nodes.count() > 0
+    assert _rows(r2.entity_nodes) == nodes1
+
+
+@pytest.mark.parametrize("link_mode", ["inline", "salted"])
+def test_entity_nodes_match_canonicalize_oracle(spark, tmp_path, link_mode):
+    """run_production's entity_nodes equal canonicalize() over the full
+    mention table, row for row. That route also maps every KB entity to
+    itself, so its canonical-id rewrite of the triples was the identity and
+    graph_edges/metrics equal their values over the checkpointed triples.
+    Checked after the full run and after the resume."""
+    t = generate_transcripts(spark, 20).cache()
+    t.count()
+    alias = alias_dict(spark)
+    out = str(tmp_path / "kg")
+    for skipped in (0, 4):  # full run, then resume
+        r = run_production(spark, t, alias, out, n_buckets=4, link_mode=link_mode)
+        assert r.buckets_skipped == skipped
+        linked = link_mentions(detect_mentions(r.triples), alias)
+        oracle = canonicalize(r.triples, linked)[0]
+        nodes = _rows(r.entity_nodes)
+        assert nodes and nodes == _rows(oracle)
+        assert all(m == "e:" + c for c, m, is_kb in nodes if is_kb)
+        assert _rows(r.graph_edges) == _rows(materialize_graph(r.triples))
+        assert _rows(r.metrics) == _rows(
+            violation_counters(r.triples, alias).withColumn("stage", F.lit("link"))
+        )
+
+
+def _two_mention_input(spark):
+    """'Globex' is the second dictionary mention of its argument and the
+    first mention of no argument."""
+    triples = spark.createDataFrame(
+        [
+            ("c0", 0, 0, 0, 0, "Acme Corp and Globex", "hired", "Initech"),
+            ("c1", 0, 0, 0, 0, "Acme", "sued", "the Unknown Firm"),
+        ],
+        "conv_id string, turn_idx int, sent_idx int, split_idx int, "
+        "ext_idx int, arg1 string, rel string, arg2 string",
+    )
+    alias = spark.createDataFrame(
+        [
+            ("acme corp", "E1", "Acme Corp", "ORG", 0.9),
+            ("acme", "E1", "Acme Corp", "ORG", 0.5),
+            ("globex", "E2", "Globex", "ORG", 0.8),
+            ("globex", "E9", "Globex Ltd", "ORG", 0.1),
+            ("initech", "E3", "Initech", "ORG", 0.7),
+        ],
+        "surface_form string, entity_id string, canonical_name string, "
+        "ner_type string, prior double",
+    )
+    return triples, alias
+
+
+def test_entity_nodes_keep_every_mention_of_an_argument(spark):
+    triples, alias = _two_mention_input(spark)
+    got = _rows(entity_nodes(triples, alias))
+    linked = link_mentions(detect_mentions(triples), alias)
+    assert got == _rows(canonicalize(triples, linked)[0])
+    # a first-surface-only shortcut would miss both rows
+    assert got[("E2", "s:globex", False)] == 1
+    assert got[("E2", "e:E2", True)] == 1
+    assert len(got) == 7
+
+
+def test_entity_nodes_plan_skips_mention_table(spark):
+    """One Python stage, and no operator outputs MENTION_SCHEMA's
+    ``mention`` column: detect_mentions is off the production path."""
+    triples, alias = _two_mention_input(spark)
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    mention_col = re.compile(r"\bmention#\d+")
+    plan = optimized(entity_nodes(triples, alias))
+    assert plan.count("MapInPandas") == 1, plan
+    assert not mention_col.search(plan), plan
+    # the pattern does catch the mention table where it is built
+    assert mention_col.search(optimized(detect_mentions(triples)))
 
 
 def test_stage_counters_written(spark, tmp_path):
