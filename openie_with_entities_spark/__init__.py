@@ -4,7 +4,7 @@ prajnaupadhyay/openie-with-entities (EACL 2023).
 
 Architecture (idiomatic Spark, NOT a port):
 
-    transcripts(conv_id, turn_idx, role, text, tool, ts)      [parquet/Iceberg]
+    transcripts(conv_id, turn_idx, role, text, tool, ts)      [parquet]
         │  segment (native columns: normalize quotes, posexplode sentences)
         ▼
     sentences(conv_id, turn_idx, sent_idx, text)

@@ -235,6 +235,3 @@ def write_corpus(spark: SparkSession, path: str, n_convs: int, seed: int = SEED)
     df.repartition(parallelism, F.col("conv_id")).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "transcripts.parquet"))
-    from .operators.docops import clear_spread_cache
-
-    clear_spread_cache()  # partition-count memos for this path are now stale

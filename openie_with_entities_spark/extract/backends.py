@@ -15,7 +15,9 @@ forward-pass shape the reference's two predict() loops have
     (the reference's module-level singleton pattern, data.py:28).
 
 Both ride the same stages, so the partitioning/shuffle story is identical —
-swapping backends changes zero Spark-side code.
+swapping backends changes zero Spark-side code. A backend must be a pure
+function of its token lists: the stages memoize results per text
+(stages.per_distinct), so a sentence seen twice is labeled once.
 """
 
 from __future__ import annotations

@@ -17,12 +17,11 @@ between stages. Fusing the per-sentence pipeline:
     repartition — and since round 7 even that is skipped when the input
     scan already feeds every core (see stages._partition_for_inference).
 
+The per-text work is the modular stages' own: ``run`` segments and
+length-guards each turn, resolves every sentence instance through
+``stages.per_distinct`` — whose compute composes ``stages.conj_kernel``
+and ``stages.oie_kernel`` — and replays the per-sentence rows per instance.
 Equivalence with the modular path is asserted by tests/test_fused.py.
-
-Batched-model note: a neural backend calls the conj model once per Arrow
-batch, expands splits, then calls the OIE model once on the expanded batch —
-the same two batched forward passes as the reference's two predict() loops,
-just colocated.
 
 Linking summary: the stage takes the (broadcast-sized, deduplicated)
 dictionary SURFACE SET and emits, per argument, the first dictionary-matched
@@ -38,18 +37,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.decode import (
-    SENTINELS,
-    decode_coordinations,
-    decode_extractions,
-    extraction_key,
-    normalize_quotes,
-    split_by_coordinations,
-)
+from ..functions.decode import SENTINELS, extraction_key, normalize_quotes
 from ..oracle import MAX_WORDS_WITH_SENTINELS, segment_text
 from .backends import DeterministicBackend
 from .mentions import _spans, normalize_surface
-from .stages import _partition_for_inference, _strip_sentinels
+from .stages import _partition_for_inference, conj_kernel, oie_kernel, per_distinct
 
 FUSED_SCHEMA = (
     "conv_id string, turn_idx int, sent_idx int, split_idx int, ext_idx int, "
@@ -57,19 +49,6 @@ FUSED_SCHEMA = (
     "arg1_surface string, arg1_n_mentions int, "
     "arg2_surface string, arg2_n_mentions int"
 )
-
-# Per-TASK memo bounds (round 7). The extraction result of a sentence is a
-# pure function of its TEXT — the reference itself pools all work per
-# sentence text (its ``mapping``/``all_predictions`` dicts,
-# /root/reference/run.py:163-204, model.py:609-634) — so within one task
-# each distinct sentence is labeled/decoded/link-summarized ONCE and every
-# further instance replays the memoized rows. The memos live inside the
-# mapInPandas ``run`` closure: born and garbage-collected with the task,
-# never shared across tasks or runs (every bench/oracle invocation
-# recomputes from its inputs). Caps bound worker memory on adversarial
-# corpora; an over-cap sentence is simply computed without being stored.
-_SENT_MEMO_CAP = 100_000
-_LINK_MEMO_CAP = 200_000
 
 
 def _link_summary(text: str, surfaces: frozenset[str]) -> tuple[str | None, int]:
@@ -98,12 +77,10 @@ def fused_extract_stage(
     At most TWO backend calls per Arrow batch — conj labels for the batch's
     NEW distinct sentences, then OIE labels for their split sentences — the
     same two batched forward passes as the reference's predict loops,
-    colocated. Distinct-sentence memoization (round 7): extraction is a pure
-    function of the sentence text, and the reference pools exactly this way
-    (text-keyed ``mapping`` dicts), so repeated sentences — boilerplate,
-    fillers, quoted turns — cost one dict probe instead of a model call.
-    The memo is task-local (see _SENT_MEMO_CAP above): results replay
-    row-identically, counters included.
+    colocated. Repeated sentences — boilerplate, fillers, quoted turns —
+    cost one dict probe instead of a model call: ``stages.per_distinct``
+    memos per sentence text and, for the link summary, per argument text,
+    and replays row-identically, counters included.
 
     ``counters``: optional plans.metrics.StageCounters (FUSED_COUNTERS set)
     incremented per Arrow batch — one accumulator update per batch, not per
@@ -111,17 +88,40 @@ def fused_extract_stage(
     backend = backend or DeterministicBackend()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # task-lifetime memos (never outlive the task — see _SENT_MEMO_CAP)
         memo: dict[str, tuple[list[tuple], int, int]] = {}
         link_memo: dict[str, tuple[str | None, int]] = {}
 
-        def link(text: str) -> tuple[str | None, int]:
-            r = link_memo.get(text)
-            if r is None:
-                r = _link_summary(text, surfaces)
-                if len(link_memo) < _LINK_MEMO_CAP:
-                    link_memo[text] = r
-            return r
+        def link(texts: list[str]) -> list[tuple[str | None, int]]:
+            return [_link_summary(t, surfaces) for t in texts]
+
+        def extract(texts: list[str]) -> list[tuple[list[tuple], int, int]]:
+            """Per sentence: (row templates, n splits, n deduped) — all
+            splits' extractions under the reference's insert-order dedup
+            (/root/reference/model.py:595-634), then the link summary."""
+            conj = conj_kernel(backend, texts)
+            exts = iter(oie_kernel(
+                backend, [s for splits, *_ in conj for s in splits]
+            ))
+            per_sent = []
+            for splits, *_ in conj:
+                rows: list[tuple] = []
+                seen: set[str] = set()
+                n = 0
+                for split_idx in range(len(splits)):
+                    split_exts = next(exts)
+                    n += len(split_exts)
+                    for ext_idx, (arg1, rel, arg2, conf) in enumerate(split_exts):
+                        key = extraction_key(arg1, arg2, rel)
+                        if key not in seen:
+                            seen.add(key)
+                            rows.append((split_idx, ext_idx, arg1, rel, arg2, conf))
+                per_sent.append((rows, len(splits), n - len(rows)))
+            args = [a for rows, _, _ in per_sent for r in rows for a in (r[2], r[4])]
+            links = iter(per_distinct(link_memo, args, link))
+            return [
+                ([r + next(links) + next(links) for r in rows], nsp, ndd)
+                for rows, nsp, ndd in per_sent
+            ]
 
         for pdf in batches:
             n_sent = n_long = n_splits = n_ext = n_dedup = 0
@@ -131,86 +131,22 @@ def fused_extract_stage(
                 "arg1_surface", "arg1_n_mentions",
                 "arg2_surface", "arg2_n_mentions",
             )}
-            # pass 1: segment + length-guard every turn; queue sentences the
-            # memo has not seen (batch-first-occurrence order, so backend
-            # call order stays deterministic)
-            instances: list = []  # (conv_id, turn_idx, sent_idx, text)
-            new_texts: list[str] = []
-            token_lists: list[list[str]] = []
-            queued: set[str] = set()
+            instances: list = []  # (conv_id, turn_idx, sent_idx)
+            texts: list[str] = []
             for conv_id, turn_idx, turn_text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"]
             ):
                 for sent_idx, raw in enumerate(segment_text(turn_text)):
                     n_sent += 1
                     text = normalize_quotes(raw)
-                    tokens = text.split() + SENTINELS
-                    if len(tokens) > MAX_WORDS_WITH_SENTINELS:
+                    if len(text.split()) + len(SENTINELS) > MAX_WORDS_WITH_SENTINELS:
                         n_long += 1
                         continue
-                    instances.append((conv_id, turn_idx, sent_idx, text))
-                    if text not in memo and text not in queued:
-                        queued.add(text)
-                        new_texts.append(text)
-                        token_lists.append(tokens)
-            # one conj-model call for the batch's new distinct sentences
-            matrices = backend.conj_batch(token_lists) if token_lists else []
-            # expand coordinations into split sentences
-            split_meta: list = []  # (sent row id, split_idx)
-            split_tokens: list[list[str]] = []
-            for row_id, (tokens, matrix) in enumerate(
-                zip(token_lists, matrices)
+                    instances.append((conv_id, turn_idx, sent_idx))
+                    texts.append(text)
+            for (conv_id, turn_idx, sent_idx), (rows_t, nsp, ndd) in zip(
+                instances, per_distinct(memo, texts, extract)
             ):
-                coords = decode_coordinations(matrix)
-                split_texts, _cw, _ = split_by_coordinations(coords, tokens)
-                splits = [_strip_sentinels(t) for t in split_texts] or [
-                    new_texts[row_id]
-                ]
-                for split_idx, split in enumerate(splits):
-                    split_meta.append((row_id, split_idx))
-                    split_tokens.append(split.split() + SENTINELS)
-            # one OIE-model call for all splits of those sentences
-            labeled = backend.oie_batch(split_tokens) if split_tokens else []
-            # decode + per-sentence insert-order dedup + link summary into
-            # per-sentence row templates (the memo payload)
-            fresh: dict[str, tuple[list[tuple], int, int]] = {}
-            t_rows: list[list[tuple]] = [[] for _ in new_texts]
-            t_splits = [0] * len(new_texts)
-            t_dedup = [0] * len(new_texts)
-            seen_for: int = -1
-            seen: set[str] = set()
-            for (row_id, split_idx), stoks, (rows, confs) in zip(
-                split_meta, split_tokens, labeled
-            ):
-                if row_id != seen_for:
-                    seen_for, seen = row_id, set()
-                t_splits[row_id] += 1
-                for ext_idx, (arg1, rel, arg2, conf) in enumerate(
-                    decode_extractions(rows, stoks, confs)
-                ):
-                    key = extraction_key(arg1, arg2, rel)
-                    if key in seen:
-                        t_dedup[row_id] += 1
-                        continue
-                    seen.add(key)
-                    s1, n1 = link(arg1)
-                    s2, n2 = link(arg2)
-                    t_rows[row_id].append(
-                        (split_idx, ext_idx, arg1, rel, arg2, conf,
-                         s1, n1, s2, n2)
-                    )
-            for row_id, text in enumerate(new_texts):
-                entry = (t_rows[row_id], t_splits[row_id], t_dedup[row_id])
-                fresh[text] = entry
-                if len(memo) < _SENT_MEMO_CAP:
-                    memo[text] = entry
-            # pass 2: replay the per-sentence template for every instance —
-            # row order and counter totals identical to the unmemoized loop
-            for conv_id, turn_idx, sent_idx, text in instances:
-                tmpl = memo.get(text)
-                if tmpl is None:
-                    tmpl = fresh[text]
-                rows_t, nsp, ndd = tmpl
                 n_splits += nsp
                 n_dedup += ndd
                 n_ext += len(rows_t)

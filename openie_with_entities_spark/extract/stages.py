@@ -1,5 +1,5 @@
 """The two heavy mapInPandas stages: conjunction splitting and OIE
-extraction.
+extraction — and the extraction core they share with extract.fused.
 
 Stage contract (the reference's batch loop, re-expressed for Spark):
 
@@ -8,7 +8,9 @@ Stage contract (the reference's batch loop, re-expressed for Spark):
   oie stage   ≙ oie-model predict + triple decode + insert-time dedup
                (/root/reference/run.py:229-236, model.py:603-639)
 
-Both stages:
+The per-text work of each step exists once, as a batch kernel
+(``conj_kernel``, ``oie_kernel``) that the modular stages here and the
+fused body call alike. Both stages:
   * are repartitioned by hash(conv_id) first — the explicit shuffle the
     north rule requires, and the ONLY shuffle before the final aggregate;
   * sort within partitions by token count (the reference's bucket-by-length
@@ -19,13 +21,18 @@ Both stages:
     same structure (the model handle would be a per-worker singleton, the
     reference's module-level pattern at /root/reference/data.py:28).
 
-All keys travel as columns; the reference's driver-side ``mapping`` /
-``conj_word_mapping`` dicts (/root/reference/run.py:163-204) do not exist.
+Extraction is a pure function of the sentence text, and the reference pools
+all work by text (its ``mapping`` / ``all_predictions`` dicts,
+/root/reference/run.py:163-204, model.py:609-634). ``per_distinct`` is that
+pooling as a hash join between a batch's instances and its distinct texts,
+over one memo dict per stage that lives and dies with the mapInPandas task.
+All other keys travel as columns; nothing is pooled on the driver.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Hashable, Iterable, Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -49,11 +56,76 @@ TRIPLE_SCHEMA = (
     "arg1 string, rel string, arg2 string, confidence double"
 )
 
+# Bounds each task-local memo on adversarial corpora (worker memory); a key
+# seen after the memo is full is computed without being stored.
+_MEMO_CAP = 100_000
+
+
+def per_distinct(memo: dict, keys: Iterable[Hashable], compute: Callable) -> list:
+    """Results aligned with ``keys`` (one per instance), computed once per
+    distinct key.
+
+    ``compute`` maps a list of keys to a list of results. It runs at most
+    once per call, on the keys ``memo`` lacks, in first-occurrence order —
+    so backend call order is deterministic. New results are stored in
+    ``memo`` while it holds fewer than ``_MEMO_CAP`` keys; over-cap keys
+    still resolve for this call."""
+    keys = list(keys)
+    new = [k for k in dict.fromkeys(keys) if k not in memo]
+    fresh = dict(zip(new, compute(new))) if new else {}
+    for k, v in fresh.items():
+        if len(memo) >= _MEMO_CAP:
+            break
+        memo[k] = v
+    return [fresh[k] if k in fresh else memo[k] for k in keys]
+
 
 def _strip_sentinels(text: str) -> str:
     """Recover the clean sentence from a sentinel-suffixed one — the
     reference's orig-sentence recovery (/root/reference/model.py:613)."""
     return text.split("[unused1]")[0].strip()
+
+
+def conj_kernel(backend, texts: list[str]) -> list[tuple]:
+    """One conj-model call over ``texts``, then coordination decode and
+    split: per text ``(splits, conj_words, split_indices, n_tokens)``.
+
+    ``split_indices`` holds, per split, the ascending original-token
+    positions of its tokens, the reference's ``sentences_indices[i][j]``
+    (/root/reference/run.py:163-204); ``n_tokens`` excludes the sentinels.
+    A text with no (splittable) coordination is its own single split over
+    ``range(n_tokens)`` — the identity mapping of run.py:183-186, 255-257."""
+    token_lists = [t.split() + SENTINELS for t in texts]
+    out = []
+    for text, tokens, matrix in zip(
+        texts, token_lists, backend.conj_batch(token_lists)
+    ):
+        split_texts, conj_words, idx_lists = split_by_coordinations(
+            decode_coordinations(matrix), tokens
+        )
+        n_clean = len(tokens) - len(SENTINELS)
+        if split_texts:
+            splits = [_strip_sentinels(t) for t in split_texts]
+            split_indices = [
+                [i for i in sorted(s) if i < n_clean] for s in idx_lists
+            ]
+        else:
+            splits, split_indices = [text], [list(range(n_clean))]
+        out.append((splits, conj_words, split_indices, n_clean))
+    return out
+
+
+def oie_kernel(backend, texts: list[str]) -> list[list[tuple]]:
+    """One OIE-model call over ``texts``, then triple decode with the
+    reference's per-sentence insert-time dedup: per text, its
+    ``(arg1, rel, arg2, confidence)`` extractions."""
+    token_lists = [t.split() + SENTINELS for t in texts]
+    return [
+        decode_extractions(rows, tokens, confs)
+        for tokens, (rows, confs) in zip(
+            token_lists, backend.oie_batch(token_lists)
+        )
+    ]
 
 
 def _partition_for_inference(df: DataFrame, text_col: str, partitions: int | None) -> DataFrame:
@@ -114,25 +186,15 @@ def conj_split_stage(
     /root/reference/run.py:183-186.
 
     ``backend``: a labeling backend (extract.backends); the conj model runs
-    ONCE per Arrow batch, the reference's batched predict loop shape.
+    at most ONCE per Arrow batch, the reference's batched predict loop shape.
 
-    ``with_indices`` appends two columns the S8 labels sink needs —
-    ``split_indices`` (ascending original-token positions of this split's
-    tokens, the reference's ``sentences_indices[i][j]``,
-    /root/reference/run.py:163-204) and ``n_orig_tokens`` (token count of
-    the original sentence, sentinels excluded); the identity split maps to
-    range(n_orig_tokens) exactly like run.py:255-257.
+    ``with_indices`` appends the two columns the S8 labels sink needs,
+    ``split_indices`` and ``n_orig_tokens`` (see ``conj_kernel``).
     """
     backend = backend or DeterministicBackend()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # task-local distinct-sentence memo (same rationale and bound as
-        # extract.fused: splitting is a pure function of the text, and the
-        # reference pools per sentence text)
-        from .fused import _SENT_MEMO_CAP
-
         memo: dict[str, tuple] = {}
-
         for pdf in batches:
             out: dict[str, list] = {
                 "conv_id": [], "turn_idx": [], "sent_idx": [],
@@ -142,41 +204,12 @@ def conj_split_stage(
             if with_indices:
                 out["split_indices"] = []
                 out["n_orig_tokens"] = []
-            # batch the conj call over the batch's NEW distinct sentences;
-            # ``new`` covers every non-memoized text of the batch, so the
-            # batch-local dict always resolves (over-cap entries simply
-            # are not carried to the next batch)
-            fresh: dict[str, tuple] = {}
-            new = [t for t in dict.fromkeys(pdf["text"]) if t not in memo]
-            if new:
-                token_lists = [t.split() + SENTINELS for t in new]
-                matrices = backend.conj_batch(token_lists)
-                for text, tokens, matrix in zip(new, token_lists, matrices):
-                    coords = decode_coordinations(matrix)
-                    texts, conj_words, idx_lists = split_by_coordinations(
-                        coords, tokens
-                    )
-                    n_clean = len(tokens) - len(SENTINELS)
-                    if texts:
-                        splits = [_strip_sentinels(t) for t in texts]
-                        clean_idx = [
-                            [i for i in sorted(s) if i < n_clean]
-                            for s in idx_lists
-                        ]
-                    else:
-                        splits = [text]
-                        clean_idx = [list(range(n_clean))]
-                    entry = (splits, conj_words, clean_idx, n_clean)
-                    fresh[text] = entry
-                    if len(memo) < _SENT_MEMO_CAP:
-                        memo[text] = entry
-            for conv_id, turn_idx, sent_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["sent_idx"], pdf["text"]
+            for conv_id, turn_idx, sent_idx, (
+                splits, conj_words, split_indices, n_clean
+            ) in zip(
+                pdf["conv_id"], pdf["turn_idx"], pdf["sent_idx"],
+                per_distinct(memo, pdf["text"], partial(conj_kernel, backend)),
             ):
-                hit = memo.get(text)
-                if hit is None:
-                    hit = fresh[text]
-                splits, conj_words, clean_idx, n_clean = hit
                 for k, s in enumerate(splits):
                     out["conv_id"].append(conv_id)
                     out["turn_idx"].append(turn_idx)
@@ -186,7 +219,7 @@ def conj_split_stage(
                     out["split_text"].append(s)
                     out["conj_words"].append(conj_words)
                     if with_indices:
-                        out["split_indices"].append(clean_idx[k])
+                        out["split_indices"].append(split_indices[k])
                         out["n_orig_tokens"].append(n_clean)
             yield pd.DataFrame(out)
 
@@ -209,44 +242,24 @@ def oie_stage(
     Insert-time dedup WITHIN one split sentence (first depth wins) happens
     here, exactly like the reference's per-sentence loop; cross-split dedup
     under the original sentence is a separate relational operator
-    (see operators.dedup). ``backend``: one OIE-model call per Arrow batch.
+    (see operators.dedup). ``backend``: at most one OIE-model call per
+    Arrow batch.
     """
     backend = backend or DeterministicBackend()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # task-local distinct-split-sentence memo: label + decode once per
-        # distinct split text (same rationale/bound as extract.fused)
-        from .fused import _SENT_MEMO_CAP
-
         memo: dict[str, list] = {}
-
         for pdf in batches:
             out: dict[str, list] = {
                 "conv_id": [], "turn_idx": [], "sent_idx": [],
                 "split_idx": [], "ext_idx": [], "arg1": [], "rel": [],
                 "arg2": [], "confidence": [],
             }
-            fresh: dict[str, list] = {}
-            new = [
-                t for t in dict.fromkeys(pdf["split_text"]) if t not in memo
-            ]
-            if new:
-                token_lists = [t.split() + SENTINELS for t in new]
-                labeled = backend.oie_batch(token_lists)
-                for text, tokens, (rows, confs) in zip(
-                    new, token_lists, labeled
-                ):
-                    exts = list(decode_extractions(rows, tokens, confs))
-                    fresh[text] = exts
-                    if len(memo) < _SENT_MEMO_CAP:
-                        memo[text] = exts
-            for conv_id, turn_idx, sent_idx, split_idx, text in zip(
+            for conv_id, turn_idx, sent_idx, split_idx, exts in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["sent_idx"],
-                pdf["split_idx"], pdf["split_text"],
+                pdf["split_idx"],
+                per_distinct(memo, pdf["split_text"], partial(oie_kernel, backend)),
             ):
-                exts = memo.get(text)
-                if exts is None:  # ``new`` covered every non-memoized text
-                    exts = fresh[text]
                 for j, (arg1, rel, arg2, conf) in enumerate(exts):
                     out["conv_id"].append(conv_id)
                     out["turn_idx"].append(turn_idx)

@@ -19,6 +19,7 @@ attempts table).
 from __future__ import annotations
 
 import multiprocessing as mp
+import os
 import time
 from dataclasses import dataclass
 
@@ -50,11 +51,15 @@ class StealReading:
 
 
 def measure_steal(
-    n: int = 4_000_000, procs: int = 32, waves: int = 2, repeats: int = 3
+    n: int = 4_000_000,
+    procs: int = os.cpu_count() or 1,
+    waves: int = 2,
+    repeats: int = 3,
 ) -> StealReading:
     """Measure the host-steal ratio: per-wave wall of ``procs`` concurrent
-    busy-loops over the single-process wall.  ~5-10s at the defaults;
-    pass smaller ``n``/``waves`` for a quick in-test reading."""
+    busy-loops (default: one per core, so the probe measures steal, not
+    oversubscription) over the single-process wall.  ~5-10s at the
+    defaults; pass smaller ``n``/``waves`` for a quick in-test reading."""
     single = min(_timed(n) for _ in range(repeats))
     t0 = time.perf_counter()
     with mp.Pool(procs) as p:

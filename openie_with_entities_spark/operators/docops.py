@@ -595,45 +595,14 @@ def winnowing_fingerprint(
 # -------------------------------------------------------------------- dedup
 
 
-_SPREAD_CACHE: dict[int, int] = {}
-
-
-def clear_spread_cache() -> None:
-    """Drop memoized partition counts. Call after rewriting a parquet path
-    whose DataFrames may have been probed before (stale counts otherwise
-    survive until the 256-entry wholesale clear)."""
-    _SPREAD_CACHE.clear()
-
-
 def _spread(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Rebalance tiny scans across cores. A small local parquet arrives as
     ONE input split, which would serialize the CPU-heavy hash projections
     below onto a single core. No-op (no shuffle) when the scan already has
     enough partitions — at 100 TB the reader produces thousands of splits on
-    its own and this never fires.
-
-    The partition-count probe (plan→RDD conversion) runs ONCE per distinct
-    logical plan and is memoized on the analyzed plan's semanticHash —
-    operators invoked repeatedly over the same source (every bench/driver
-    run) previously re-planned the RDD conversion on each call. The cache
-    has no path-content invalidation of its own, so helpers that REWRITE a
-    parquet path in-session (corpus.write_corpus, the checkpoint manager)
-    call ``clear_spread_cache()`` after the write; a missed clear costs a
-    redundant or missing rebalance, never a wrong result."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * 2
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - connect/classic API drift
-        h = None
-    parts = _SPREAD_CACHE.get(h) if h is not None else None
-    if parts is None:
-        parts = df.rdd.getNumPartitions()
-        if h is not None:
-            if len(_SPREAD_CACHE) > 256:
-                _SPREAD_CACHE.clear()
-            _SPREAD_CACHE[h] = parts
-    if parts >= target:
+    its own and this never fires."""
+    target = df.sparkSession.sparkContext.defaultParallelism * 2
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, key)
 

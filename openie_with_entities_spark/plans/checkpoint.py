@@ -175,9 +175,6 @@ class CheckpointManager:
             self.spark.createDataFrame(
                 lineage_rows, schema=LINEAGE_SCHEMA
             ).write.mode("append").parquet(lineage_path)
-            from ..operators.docops import clear_spread_cache
-
-            clear_spread_cache()  # data_path was just (re)written
 
         full = self.spark.read.parquet(data_path).drop(BUCKET_COL)
         return StageRun(

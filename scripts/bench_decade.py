@@ -56,9 +56,6 @@ def build_10x(spark, sf_dir: str, path: str):
     )
     parallelism = spark.sparkContext.defaultParallelism
     big.repartition(parallelism * 2).write.mode("overwrite").parquet(path)
-    from openie_with_entities_spark.operators.docops import clear_spread_cache
-
-    clear_spread_cache()
     return spark.read.parquet(path)
 
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Host-steal probe CLI: time a fixed busy-loop single-proc, then 32
-concurrent procs.  On a quiet 32-core box the per-task wall at 32 procs is
-~1.0-1.3x the single-proc wall; host steal inflates it.  Logic lives in
+"""Host-steal probe CLI: time a fixed busy-loop single-proc, then one
+concurrent proc per core.  On a quiet box the per-task wall at full width
+is ~1.0-1.3x the single-proc wall; host steal inflates it.  Logic lives in
 ``openie_with_entities_spark.noise`` (shared with the test suite's
 steal-aware timing bounds)."""
 import os

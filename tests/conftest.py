@@ -1,5 +1,3 @@
-import os
-
 import pytest
 
 from openie_with_entities_spark.session import get_spark
@@ -21,7 +19,7 @@ def steal_ratio():
     NEVER depend on this — only timing bounds scale with it."""
     from openie_with_entities_spark.noise import measure_steal
 
-    r = measure_steal(n=2_000_000, procs=os.cpu_count() or 1, waves=1, repeats=2)
+    r = measure_steal(n=2_000_000, waves=1, repeats=2)
     print(f"\n[steal probe] {r}")
     return r.ratio
 

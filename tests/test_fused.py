@@ -57,15 +57,54 @@ def test_fused_mention_counts(both):
     assert counts(modular) == counts(fused)
 
 
+def test_per_distinct_computes_each_new_key_once(monkeypatch):
+    """The extraction memo: results align with the instance keys, and
+    ``compute`` sees each call's new keys once, in first-occurrence order.
+    The empty-list result (falsy) guards against ``get(...) or ...``
+    lookups."""
+    from openie_with_entities_spark.extract import stages
+
+    calls = []
+
+    def compute(keys):
+        calls.append(list(keys))
+        return [[] if k == "empty" else k.upper() for k in keys]
+
+    memo = {}
+    got = stages.per_distinct(memo, ["b", "a", "b", "empty", "a"], compute)
+    assert got == ["B", "A", "B", [], "A"]
+    assert calls == [["b", "a", "empty"]]
+    # every key memoized: no compute call at all
+    assert stages.per_distinct(memo, ["empty", "a"], compute) == [[], "A"]
+    assert len(calls) == 1
+    assert stages.per_distinct(memo, ["d", "a", "c", "d"], compute) == [
+        "D", "A", "C", "D"
+    ]
+    assert calls[-1] == ["d", "c"]
+
+    # over the cap: computed and returned, but not stored
+    monkeypatch.setattr(stages, "_MEMO_CAP", 1)
+    memo = {}
+    got = stages.per_distinct(memo, ["x", "empty", "x", "empty"], compute)
+    assert got == ["X", [], "X", []]
+    assert memo == {"x": "X"}
+    assert stages.per_distinct(memo, ["empty", "x"], compute) == [[], "X"]
+    assert calls[-1] == ["empty"]
+
+
 def test_fused_memo_replays_instances_across_batches(spark):
     """Round-7 memoization witness: a corpus that is mostly REPEATED
     sentence texts (forced across multiple Arrow batches in one task) must
     produce row-for-row what the sequential (unmemoized) oracle produces
-    per instance, and the stage counters must count per INSTANCE, not per
-    distinct sentence."""
+    per instance, the stage counters must count per INSTANCE, not per
+    distinct sentence, and the backend must see each distinct sentence
+    once, in at most one conj and one OIE call per Arrow batch."""
     import datetime as dt
 
     from openie_with_entities_spark.corpus import alias_dict
+    from openie_with_entities_spark.extract.backends import (
+        DeterministicBackend,
+    )
     from openie_with_entities_spark.extract.fused import fused_extract_stage
     from openie_with_entities_spark.linking import dictionary_surfaces
     from openie_with_entities_spark.oracle import reference_triples
@@ -91,10 +130,28 @@ def test_fused_memo_replays_instances_across_batches(spark):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
     )
+
+    class CountingBackend(DeterministicBackend):
+        def __init__(self, sc):
+            self.acc = {
+                k: sc.accumulator(0)
+                for k in ("conj_calls", "conj_sentences", "oie_calls")
+            }
+
+        def conj_batch(self, token_lists):
+            self.acc["conj_calls"].add(1)
+            self.acc["conj_sentences"].add(len(token_lists))
+            return super().conj_batch(token_lists)
+
+        def oie_batch(self, token_lists):
+            self.acc["oie_calls"].add(1)
+            return super().oie_batch(token_lists)
+
+    backend = CountingBackend(spark.sparkContext)
     counters = StageCounters(spark, "fused_memo_test", FUSED_COUNTERS)
     out = fused_extract_stage(
         t, dictionary_surfaces(alias_dict(spark)), partitions=1,
-        counters=counters,
+        counters=counters, backend=backend,
     ).collect()
 
     expected_one = reference_triples(
@@ -121,3 +178,13 @@ def test_fused_memo_replays_instances_across_batches(spark):
     assert tot["sentences_in"] == n_turns
     n_coord = len([i for i in range(n_turns) if i % 4 == 2])
     assert tot["splits_out"] == (n_turns - n_coord) + 3 * n_coord
+    # one task (partitions=1): each distinct text labeled once over both
+    # Arrow batches, at most one conj and one OIE call per batch
+    batch_rows = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    n_batches = -(-n_turns // batch_rows)
+    assert n_batches >= 2
+    assert backend.acc["conj_sentences"].value == len(set(texts)) == 3
+    assert 1 <= backend.acc["conj_calls"].value <= n_batches
+    assert 1 <= backend.acc["oie_calls"].value <= n_batches

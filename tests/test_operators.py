@@ -212,22 +212,6 @@ def test_neardedup_exempts_conjunct_words(spark):
     assert neardedup_triples(t).count() == 2
 
 
-def test_iceberg_fallback_roundtrip(spark, tmp_path):
-    from openie_with_entities_spark.sources.iceberg import (
-        iceberg_available,
-        read_table,
-        write_table,
-    )
-
-    assert not iceberg_available(spark)  # no runtime jar in this sandbox
-    p = str(tmp_path / "tbl")
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    write_table(df, p, mode="replace")
-    assert read_table(spark, p).count() == 10
-    write_table(df, p, mode="append")
-    assert read_table(spark, p).count() == 20
-
-
 def test_hot_shingle_bounded_candidates(spark):
     """A boilerplate 15-gram shared by EVERY document must not explode the
     Jaccard candidate join into all-pairs: under df-ascending prefix order
