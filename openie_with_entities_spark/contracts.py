@@ -1,5 +1,7 @@
 """Driver-contract entries for the SURVEY §2 operators that round 1 covered
-only in pytest — merged into ``__spark_entry__.queries()/oracle_sql()``.
+only in pytest. ``records()`` lists them as ``(name, query, oracle)``
+records; ``__spark_entry__`` appends them to its own registry, from which
+``queries()`` and ``oracle_sql()`` both derive.
 
 Every entry returns SCALAR-ONLY columns (the driver's canonicalizer sorts
 all output columns in pandas; array cells are unhashable) and pairs with a
@@ -22,7 +24,7 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 FIXTURE_DIR = os.path.join(
@@ -1223,7 +1225,7 @@ def o_e6() -> str:
 def _s10_resume(spark, link_mode: str, prefix: str):
     """Shared body of the two s10 resume contracts (inline vs salted link
     path): run the full production pipeline twice against one checkpoint
-    dir and report the resume counts. Both entries share o_s10 — the
+    dir and report the resume counts. Both entries share O_S10 — the
     salted ≡ inline parity is a pytest gate (test_production.py), so the
     counts must be identical."""
     import shutil
@@ -1273,26 +1275,20 @@ def q_s10_salted_resume(spark, sf_dir):
     return _s10_resume(spark, "salted", "s10_salted_contract_")
 
 
-def o_s10(n_triples: int) -> str:
-    return f"""
+# 478 is the deterministic triple count for 20 convs / seed 42 (verified by
+# the pipeline≡oracle pytest gate; recorded here to make resume oracle-exact)
+O_S10 = """
         SELECT CAST(8 AS INT) AS first_processed, CAST(0 AS INT) AS first_skipped,
                CAST(0 AS INT) AS second_processed, CAST(8 AS INT) AS second_skipped,
-               CAST({n_triples} AS BIGINT) AS n_triples,
-               CAST({n_triples} AS BIGINT) AS n_triples_resumed,
+               CAST(478 AS BIGINT) AS n_triples,
+               CAST(478 AS BIGINT) AS n_triples_resumed,
                CAST(8 AS BIGINT) AS n_lineage_buckets
     """
 
 
-# the deterministic triple count for 20 convs / seed 42 (verified by the
-# pipeline≡oracle pytest gate; recorded here to make resume oracle-exact)
-_S10_N_TRIPLES: int | None = 478
-
-
-
-
 # --------------------------------------------------------------------------
-# Determinism oracles for two formerly rows-only entries: outputs are pure
-# functions of fixed seeds, so recorded literals ARE the cross-run /
+# Determinism oracle for the formerly rows-only kg_triples: its output is a
+# pure function of fixed seeds, so a recorded digest IS the cross-run /
 # cross-partitioning invariant the driver should verify each round.
 # --------------------------------------------------------------------------
 
@@ -1327,80 +1323,6 @@ def q_kg_triples_checksum(spark, sf_dir):
 O_KG_CHECKSUM = """
     SELECT CAST(4692 AS BIGINT) AS n_triples,
            'd6d2c378717fe5b2b13c2509de8f1058' AS checksum
-"""
-
-# synth_media payloads are RandomState(media_id) bytes; features are their
-# 16-bin byte histograms — the recorded fingerprints are the seeded truth
-O_MEDIA = """
-    SELECT CAST(media_id AS BIGINT) AS media_id, kind,
-           CAST(n_bytes AS INT) AS n_bytes, feature_fp,
-           CAST(feature_dim AS INT) AS feature_dim, feature_l1
-    FROM (VALUES
-        (0, 'image', 256, '444d6da9c76a3d3daf970c3a9e856692', 16, 1.0001),
-        (1, 'audio', 257, 'bc1918d55a0ead81cc525a51b6116d00', 16, 1.0),
-        (2, 'video', 258, '82aa865a3abf279e3d1f5b2b3ec2fedd', 16, 0.9998),
-        (3, 'image', 259, '70ca4bde7e7ee33139966191199293c5', 16, 1.0001),
-        (4, 'audio', 260, '2a8b8ab0125b7306eb751ad1b5157909', 16, 1.0),
-        (5, 'video', 261, '210aef1ac1e8145938fa4f67d1820a76', 16, 1.0001),
-        (6, 'image', 262, '0e19216a646b0b2dbfb8ccb7d74dcde7', 16, 1.0),
-        (7, 'audio', 263, '96306333e39987a1dc1964078b6f91ae', 16, 0.9994),
-        (8, 'video', 264, 'e558bbb7fb919f8a633686d76cff3c48', 16, 1.0),
-        (9, 'image', 265, '5d6ac5faa450033830c7fc62d57da267', 16, 1.0002),
-        (10, 'audio', 266, '176a815c3cd81ea31b8ba0abcccc3b1d', 16, 1.0002),
-        (11, 'video', 267, '5bcf0db74c439c7afb0fab9f181584d9', 16, 1.0002),
-        (12, 'image', 268, 'bfc1738279cd182aa1e3f254a67db0cf', 16, 1.0),
-        (13, 'audio', 269, '7e68f01b69ee653e42e718233f27c871', 16, 0.9998),
-        (14, 'video', 270, '27015852b18eb854c260569dab5b3cc3', 16, 1.0003),
-        (15, 'image', 271, '9190b45396f8eec1586ff071050d77c1', 16, 1.0001),
-        (16, 'audio', 272, 'e852c05c0b83764044ff7a1cf1d904c2', 16, 1.0001),
-        (17, 'video', 273, 'cd64bb4d6088d14d3a8456bea567eef2', 16, 1.0),
-        (18, 'image', 274, 'ac87424ba94f0200155bb284c465761a', 16, 0.9997),
-        (19, 'audio', 275, 'e84296af66fefef37b9791248c3b6863', 16, 1.0001),
-        (20, 'video', 276, '85b78eac7abbe4455bd97749e3e380ac', 16, 0.9998),
-        (21, 'image', 277, '1bcaee9ab08309cd525f9758a2dd0643', 16, 1.0001),
-        (22, 'audio', 278, '74d1173922231c2015411f17f788a79d', 16, 1.0),
-        (23, 'video', 279, '64853265861bfde404a45cfa39959ae3', 16, 1.0),
-        (24, 'image', 280, '991c75576688a9d6119e7a216e86da71', 16, 0.9998),
-        (25, 'audio', 281, '1543f776ce4bc3b72cd064e0487af9a8', 16, 1.0002),
-        (26, 'video', 282, '7e1a7a7e0a0498196d7e85c1f423a82d', 16, 0.9999),
-        (27, 'image', 283, '06638ca06dabbf609fc839fc503a8efa', 16, 0.9999),
-        (28, 'audio', 284, '9371b97e14fc8116caa80dcbc6de8ce2', 16, 1.0002),
-        (29, 'video', 285, '4a617a61f1c8249fda2eac0c55e9c423', 16, 0.9998),
-        (30, 'image', 286, '70cb6381e836ebd5b23e22a47c9212b2', 16, 0.9996),
-        (31, 'audio', 287, '00ff29499630c199aa6366e917c7bc24', 16, 1.0),
-        (32, 'video', 288, '50dc7952d2ea98c5886f27ec23f80d23', 16, 0.9998),
-        (33, 'image', 289, 'da09ebbf8a106feadf44d5d90ae812d3', 16, 0.9997),
-        (34, 'audio', 290, 'da18f0bac39b827668c82e5b6a6f549e', 16, 1.0001),
-        (35, 'video', 291, 'c1c2a61dc505ed339a782736491ca694', 16, 1.0001),
-        (36, 'image', 292, '0028f0e019bec5b170fd79dc32cb2e74', 16, 0.9999),
-        (37, 'audio', 293, '90fa4d7f9d0acd14430c99264478a24b', 16, 1.0),
-        (38, 'video', 294, 'bb8f8a1265d600e3984367d22476bd46', 16, 0.9996),
-        (39, 'image', 295, '54c52a9e5dd0a1584a721a7ef767c789', 16, 0.9998),
-        (40, 'audio', 296, 'd6d6845cf2afc31eff0bb5ffe36bd17d', 16, 0.9999),
-        (41, 'video', 297, '73ae3825a16b651975f8841a0f21a790', 16, 0.9999),
-        (42, 'image', 298, '9bab7403c735c955764da20fc80a6d15', 16, 0.9999),
-        (43, 'audio', 299, '409c39147f218bb11264dca0c36dc611', 16, 1.0),
-        (44, 'video', 300, '87d43b679f10186828b9aff196b06cff', 16, 1.0001),
-        (45, 'image', 301, 'b11f0adc4221408e2e3ce3ac0b462812', 16, 1.0),
-        (46, 'audio', 302, 'c6b46663133e3f2c8662c533cb887403', 16, 0.9998),
-        (47, 'video', 303, 'f2d69ab32f4f699b2b85aeaab0d9cae0', 16, 0.9999),
-        (48, 'image', 304, 'abe4ba815d0e60cdc874c193326575bd', 16, 1.0001),
-        (49, 'audio', 305, '1eddf5362999e0116bec838a56c3b16a', 16, 1.0001),
-        (50, 'video', 306, '626b4d6ddcb604b982ef5f28bed05d52', 16, 1.0),
-        (51, 'image', 307, 'fa907894c2611b89aa7d5bcd65d9244f', 16, 1.0),
-        (52, 'audio', 308, '696da8232946537958a162da16b2258b', 16, 1.0),
-        (53, 'video', 309, '87f2414bdf7a718468216d45ff0830c6', 16, 1.0),
-        (54, 'image', 310, '30280f3b52304354a1d41519e878a3ba', 16, 0.9999),
-        (55, 'audio', 311, 'dbd39abe2238dba63f2f4ea9b6e7c7b5', 16, 1.0),
-        (56, 'video', 312, '661a1214025a0513ea4666f7d4ab8e91', 16, 1.0),
-        (57, 'image', 313, 'bfb1afe1d219f178d2576d4ec005ca8f', 16, 1.0),
-        (58, 'audio', 314, '6585aadec10d559795c630afec6e2f0f', 16, 1.0002),
-        (59, 'video', 315, '15b3f73a395f23a5f3203d1abe7298b7', 16, 0.9997),
-        (60, 'image', 316, '427809d12bd367e39a46279712432a74', 16, 1.0001),
-        (61, 'audio', 317, '96b69c13a5229c1d54b19b99c0106745', 16, 1.0001),
-        (62, 'video', 318, '4f56be1f38fde783cff4013a98648996', 16, 1.0),
-        (63, 'image', 319, 'c39a0744b0871d1309b8c07749421c1d', 16, 1.0)
-    ) AS t(media_id, kind, n_bytes, feature_fp, feature_dim, feature_l1)
 """
 
 
@@ -1484,67 +1406,6 @@ O_E5_CONJ = """
     SELECT CAST(3 AS BIGINT) AS n_pred, CAST(3 AS BIGINT) AS n_gold,
            0.6667 AS whole_f1, 0.3333 AS outer_f1,
            0.3333 AS inner_f1, 0.3333 AS exact_f1
-"""
-
-
-# emb_ann_lsh is a pure function of the fixed hyperplane seed and the
-# embeddings table — the recorded top-k IS the cross-run invariant (recall
-# quality vs brute force is separately gated in tests/test_operators.py)
-O_ANN = """
-    SELECT CAST(q_id AS BIGINT) AS q_id, CAST(vec_id AS BIGINT) AS vec_id,
-           cos_sim, CAST(rk AS INT) AS rk
-    FROM (VALUES
-        (0, 0, 1.0, 1),
-        (0, 365, 0.37, 2),
-        (0, 334, 0.3627, 3),
-        (0, 387, 0.3311, 4),
-        (0, 423, 0.2969, 5),
-        (0, 73, 0.2954, 6),
-        (0, 7, 0.2928, 7),
-        (0, 320, 0.2879, 8),
-        (0, 190, 0.2818, 9),
-        (0, 464, 0.2766, 10),
-        (1, 1, 1.0, 1),
-        (1, 386, 0.3715, 2),
-        (1, 27, 0.3482, 3),
-        (1, 407, 0.327, 4),
-        (1, 195, 0.3227, 5),
-        (1, 64, 0.3164, 6),
-        (1, 124, 0.3028, 7),
-        (1, 402, 0.2923, 8),
-        (1, 472, 0.2921, 9),
-        (1, 220, 0.2898, 10),
-        (2, 2, 1.0, 1),
-        (2, 117, 0.3181, 2),
-        (2, 450, 0.2663, 3),
-        (2, 188, 0.2633, 4),
-        (2, 320, 0.255, 5),
-        (2, 418, 0.254, 6),
-        (2, 471, 0.2472, 7),
-        (2, 112, 0.2453, 8),
-        (2, 350, 0.2401, 9),
-        (2, 172, 0.2398, 10),
-        (3, 3, 1.0, 1),
-        (3, 130, 0.3999, 2),
-        (3, 149, 0.3299, 3),
-        (3, 343, 0.3085, 4),
-        (3, 231, 0.2988, 5),
-        (3, 207, 0.2917, 6),
-        (3, 192, 0.2908, 7),
-        (3, 315, 0.2852, 8),
-        (3, 437, 0.2805, 9),
-        (3, 474, 0.2767, 10),
-        (4, 4, 1.0, 1),
-        (4, 114, 0.3985, 2),
-        (4, 496, 0.3412, 3),
-        (4, 408, 0.3228, 4),
-        (4, 482, 0.3139, 5),
-        (4, 280, 0.2798, 6),
-        (4, 249, 0.2796, 7),
-        (4, 257, 0.2724, 8),
-        (4, 89, 0.266, 9),
-        (4, 470, 0.2525, 10)
-    ) AS t(q_id, vec_id, cos_sim, rk)
 """
 
 
@@ -1684,27 +1545,8 @@ O_WINNOW = """
 
 
 # --------------------------------------------------------------------------
-# A3 near-dedup recorded oracle + simhash stability checksum
+# simhash stability checksum
 # --------------------------------------------------------------------------
-
-# the near-dup filter's SequenceMatcher semantics are not SQL-expressible;
-# the fixture is fixed, so the recorded survivors (verified against the
-# reference's delete-first-on-tie rule in pytest) are the oracle. Note
-# ext_idx 1 ("Turing") loses to ext_idx 2 ("Turin") on the tie.
-O_A3 = """
-    SELECT conv_id, CAST(turn_idx AS INT) AS turn_idx,
-           CAST(sent_idx AS INT) AS sent_idx,
-           CAST(split_idx AS INT) AS split_idx,
-           CAST(ext_idx AS INT) AS ext_idx,
-           arg1, rel, arg2, confidence
-    FROM (VALUES
-        ('c0', 0, 0, 0, 0, 'Bob', 'joined', 'the board of Acme Corp', 0.9),
-        ('c0', 0, 1, 0, 0, 'Bob', 'visited', 'sunny Paris', 0.8),
-        ('c0', 1, 0, 0, 0, 'Eve', 'slept', 'all day', 0.7),
-        ('c0', 1, 0, 0, 2, 'Eve', 'praised', 'Turin', 0.5)
-    ) AS t(conv_id, turn_idx, sent_idx, split_idx, ext_idx,
-           arg1, rel, arg2, confidence)
-"""
 
 
 def q_simhash_checksum(spark, sf_dir):
@@ -3252,32 +3094,27 @@ def q_stream_clean_drain(spark, sf_dir):
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", "source", "ts"
     )
     docs.unionByName(dupes).coalesce(4).write.parquet(src)
-    cleaned = streaming_clean_documents(
-        stream_documents(spark, src, max_files_per_trigger=2),
-        watermark="3650 days",
-    )
     # Streaming state-store partitioning is pinned at query start from
     # spark.sql.shuffle.partitions and AQE never coalesces it — the batch
     # default (2x cores) would spread this drain's few thousand dedup keys
     # over 64 state stores, paying 64 state files + tasks PER micro-batch
-    # (measured 3.6-4.2s -> 2.1s at 8). Size state partitions to the
-    # stream's key cardinality like a production deployment would;
-    # override via SPARK_GRAFT_STREAM_STATE_PARTITIONS for streams with
-    # genuinely large key spaces.
-    state_parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_parts)
-    try:
-        q = (
-            cleaned.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # (measured 3.6-4.2s -> 2.1s at 8). The stream runs in its own session
+    # sized to its key cardinality, so the caller's session conf (and any
+    # query running in it concurrently) never sees the change.
+    stream_spark = spark.newSession()
+    stream_spark.conf.set("spark.sql.shuffle.partitions", "8")
+    cleaned = streaming_clean_documents(
+        stream_documents(stream_spark, src, max_files_per_trigger=2),
+        watermark="3650 days",
+    )
+    q = (
+        cleaned.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     drained = spark.read.parquet(out).select(
         "content_hash",
         F.md5("text_clean").alias("scrub_fp"),
@@ -3321,172 +3158,86 @@ def o_stream_clean_drain() -> str:
     """
 
 
-def extra_queries() -> dict:
-    return {
-        "s2_labels_scan": q_s2_labels_scan,
-        "s3_conj_scan": q_s3_conj_scan,
-        "s4_gold_scan": q_s4_gold_scan,
-        "s7_allennlp_lines": q_s7_allennlp_lines,
-        "p2_sentinel_append": q_p2_sentinel_append,
-        "p3_tokenize_guard": q_p3_tokenize_guard,
-        "p4_wordpiece_align": q_p4_wordpiece_align,
-        "p6_verb_mask": q_p6_verb_mask,
-        "p8_detect_mentions": q_p8_detect_mentions,
-        "p10_char_to_word": q_p10_char_to_word,
-        "p12_decode_triple": q_p12_decode_triple,
-        "m2_decode_coords": q_m2_decode_coords,
-        "m3_conj_split": q_m3_conj_split,
-        "m4_oie_stage": q_m4_oie_stage,
-        "a1_group_by_sentence": q_a1_group_by_sentence,
-        "a5_violation_counters": q_a5_violation_counters,
-        "a11_split_conservation": q_a11_split_conservation,
-        "a12_length_buckets": q_a12_length_buckets,
-        "e1_tuple_match": q_e1_tuple_match,
-        "e2_carb_pr": q_e2_carb_pr,
-        "e6_f1_auc": q_e6_f1_auc,
-        "s10_checkpoint_resume": q_s10_checkpoint_resume,
-        "kg_triples_checksum": q_kg_triples_checksum,
-        "p15_predicate_norm": q_p15_predicate_norm,
-        "e5_conj_eval": q_e5_conj_eval,
-        "emb_cosine_neardup": q_emb_neardup,
-        "media_frame_sample": q_media_frame_sample,
-        "docs_winnowing": q_docs_winnowing,
-        "docs_simhash_checksum": q_simhash_checksum,
-        "emb_ivf_topk": q_emb_ivf_topk,
-        "s8_labels_sink": q_s8_labels_sink,
-        "e5_conj_from_labels": q_e5_conj_from_labels,
-        "docs_train_split": q_docs_train_split,
-        "docs_pack_sequences": q_docs_pack_sequences,
-        "docs_tfidf_topk": q_docs_tfidf_topk,
-        "docs_repetition_stats": q_docs_repetition,
-        "docs_pii_scrub": q_docs_pii_scrub,
-        "docs_contamination": q_docs_contamination,
-        "docs_neardup_clusters": q_docs_neardup_clusters,
-        "docs_prepare_corpus": q_docs_prepare_corpus,
-        "emb_knn_graph": q_emb_knn_graph,
-        "e1_matcher_variants": q_e1_matcher_variants,
-        "e2_carb_ss": q_e2_carb_ss,
-        "kg_graph_edges": q_kg_graph_edges,
-        "conv_dedup_exact": q_conv_dedup_exact,
-        "conv_neardup": q_conv_neardup,
-        "conv_pack": q_conv_pack,
-        "conv_quality": q_conv_quality,
-        "conv_prepare": q_conv_prepare,
-        "docs_heavy_hitters": q_docs_heavy_hitters,
-        "docs_mixture_sample": q_docs_mixture_sample,
-        "docs_unigram_logprob": q_docs_unigram_logprob,
-        "s10_salted_resume": q_s10_salted_resume,
-        "reader_ollie": q_reader_ollie,
-        "reader_openie4": q_reader_openie4,
-        "reader_openie5": q_reader_openie5,
-        "reader_props": q_reader_props,
-        "reader_reverb": q_reader_reverb,
-        "reader_stanford": q_reader_stanford,
-        "reader_tab": q_reader_tab,
-        "reader_clausie": q_reader_clausie,
-        "reader_benchmark_gold": q_reader_benchmark_gold,
-        "reader_split_tabbed": q_reader_split_tabbed,
-        "fmt_readable": q_fmt_readable,
-        "fmt_oie_to_allennlp": q_fmt_oie_to_allennlp,
-        "fmt_senseoie": q_fmt_senseoie,
-        "e2_pr_curve": q_e2_pr_curve,
-        "reader_wire57": q_reader_wire57,
-        "wire57_scores": q_wire57_scores,
-        "kg_khop": q_kg_khop,
-        "kg_degree_topk": q_kg_degree_topk,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_triangles": q_kg_triangles,
-        "stream_clean_drain": q_stream_clean_drain,
-        "e2_carb_sentences": q_e2_carb_sentences,
-        "e2_stamp_optimal": q_e2_stamp_optimal,
-        "kg_merge_edges": q_kg_merge_edges,
-        "kg_lpa": q_kg_lpa,
-    }
-
-
-def extra_oracles() -> dict:
-    oracles = {
-        "s2_labels_scan": O_S2,
-        "s3_conj_scan": O_S3,
-        "s4_gold_scan": O_S4,
-        "s7_allennlp_lines": o_s7(),
-        "p2_sentinel_append": O_P2,
-        "p3_tokenize_guard": O_P3,
-        "p4_wordpiece_align": o_p4(),
-        "p6_verb_mask": o_p6(),
-        "p8_detect_mentions": o_p8(),
-        "p10_char_to_word": o_p10(),
-        "p12_decode_triple": o_p12(),
-        "m2_decode_coords": O_M2,
-        "m3_conj_split": O_M3,
-        "m4_oie_stage": o_m4(),
-        "a1_group_by_sentence": o_a1(),
-        "a5_violation_counters": o_a5(),
-        "a11_split_conservation": O_A11,
-        "a12_length_buckets": O_A12,
-        "e1_tuple_match": O_E1,
-        "e2_carb_pr": O_E2,
-        "e6_f1_auc": o_e6(),
-        "kg_triples_checksum": O_KG_CHECKSUM,
-        "media_features": O_MEDIA,
-        "p15_predicate_norm": o_p15(),
-        "e5_conj_eval": O_E5_CONJ,
-        "emb_cosine_neardup": O_EMB_NEARDUP,
-        "media_frame_sample": O_FRAMES,
-        "docs_winnowing": O_WINNOW,
-        "a3_neardedup": O_A3,
-        "docs_simhash_checksum": O_SIMHASH_CS,
-        "emb_ivf_topk": O_IVF,
-        "emb_ann_lsh": O_ANN,
-        "s8_labels_sink": O_S8_SINK,
-        "e5_conj_from_labels": O_E5_FROM_LABELS,
-        "docs_train_split": O_TRAIN_SPLIT,
-        "docs_pack_sequences": O_PACK,
-        "docs_tfidf_topk": O_TFIDF,
-        "docs_repetition_stats": O_REPETITION,
-        "docs_pii_scrub": o_docs_pii_scrub(),
-        "docs_contamination": O_CONTAMINATION,
-        "docs_neardup_clusters": o_docs_neardup_clusters(),
-        "docs_prepare_corpus": o_docs_prepare_corpus(),
-        "emb_knn_graph": O_KNN,
-        "e1_matcher_variants": O_E1V,
-        "e2_carb_ss": O_E2_SS,
-        "kg_graph_edges": o_kg_graph_edges(),
-        "conv_dedup_exact": O_CONV_DEDUP,
-        "conv_neardup": O_CONV_NEARDUP,
-        "conv_pack": O_CONV_PACK,
-        "conv_quality": O_CONV_QUALITY,
-        "conv_prepare": o_conv_prepare(),
-        "docs_heavy_hitters": O_HEAVY_HITTERS,
-        "docs_mixture_sample": o_docs_mixture_sample(),
-        "docs_unigram_logprob": O_UNIGRAM_LP,
-        "reader_ollie": O_READER_OLLIE,
-        "reader_openie4": O_READER_OPENIE4,
-        "reader_openie5": O_READER_OPENIE5,
-        "reader_props": O_READER_PROPS,
-        "reader_reverb": O_READER_REVERB,
-        "reader_stanford": O_READER_STANFORD,
-        "reader_tab": O_READER_TAB,
-        "reader_clausie": O_READER_CLAUSIE,
-        "reader_benchmark_gold": O_READER_BGOLD,
-        "reader_split_tabbed": O_READER_SPLIT_TABBED,
-        "fmt_readable": O_FMT_READABLE,
-        "fmt_oie_to_allennlp": O_FMT_O2A,
-        "fmt_senseoie": O_FMT_SENSEOIE,
-        "e2_pr_curve": O_E2_CURVE,
-        "reader_wire57": O_READER_WIRE57,
-        "wire57_scores": O_WIRE57,
-        "kg_khop": o_kg_khop(),
-        "kg_degree_topk": o_kg_degree_topk(),
-        "kg_pagerank": o_kg_pagerank(),
-        "kg_triangles": o_kg_triangles(),
-        "stream_clean_drain": o_stream_clean_drain(),
-        "e2_carb_sentences": O_E2_SENTENCES,
-        "e2_stamp_optimal": O_E2_STAMP,
-        "kg_merge_edges": O_KG_MERGE,
-        "kg_lpa": o_kg_lpa(),
-    }
-    if _S10_N_TRIPLES is not None:
-        oracles["s10_checkpoint_resume"] = o_s10(_S10_N_TRIPLES)
-        oracles["s10_salted_resume"] = o_s10(_S10_N_TRIPLES)
-    return oracles
+def records() -> list[tuple]:
+    """This module's driver contracts, one ``(name, query, oracle)`` record
+    each; ``__spark_entry__`` registers them after its own, in this order."""
+    return [
+        ("s2_labels_scan", q_s2_labels_scan, O_S2),
+        ("s3_conj_scan", q_s3_conj_scan, O_S3),
+        ("s4_gold_scan", q_s4_gold_scan, O_S4),
+        ("s7_allennlp_lines", q_s7_allennlp_lines, o_s7()),
+        ("p2_sentinel_append", q_p2_sentinel_append, O_P2),
+        ("p3_tokenize_guard", q_p3_tokenize_guard, O_P3),
+        ("p4_wordpiece_align", q_p4_wordpiece_align, o_p4()),
+        ("p6_verb_mask", q_p6_verb_mask, o_p6()),
+        ("p8_detect_mentions", q_p8_detect_mentions, o_p8()),
+        ("p10_char_to_word", q_p10_char_to_word, o_p10()),
+        ("p12_decode_triple", q_p12_decode_triple, o_p12()),
+        ("m2_decode_coords", q_m2_decode_coords, O_M2),
+        ("m3_conj_split", q_m3_conj_split, O_M3),
+        ("m4_oie_stage", q_m4_oie_stage, o_m4()),
+        ("a1_group_by_sentence", q_a1_group_by_sentence, o_a1()),
+        ("a5_violation_counters", q_a5_violation_counters, o_a5()),
+        ("a11_split_conservation", q_a11_split_conservation, O_A11),
+        ("a12_length_buckets", q_a12_length_buckets, O_A12),
+        ("e1_tuple_match", q_e1_tuple_match, O_E1),
+        ("e2_carb_pr", q_e2_carb_pr, O_E2),
+        ("e6_f1_auc", q_e6_f1_auc, o_e6()),
+        ("s10_checkpoint_resume", q_s10_checkpoint_resume, O_S10),
+        ("kg_triples_checksum", q_kg_triples_checksum, O_KG_CHECKSUM),
+        ("p15_predicate_norm", q_p15_predicate_norm, o_p15()),
+        ("e5_conj_eval", q_e5_conj_eval, O_E5_CONJ),
+        ("emb_cosine_neardup", q_emb_neardup, O_EMB_NEARDUP),
+        ("media_frame_sample", q_media_frame_sample, O_FRAMES),
+        ("docs_winnowing", q_docs_winnowing, O_WINNOW),
+        ("docs_simhash_checksum", q_simhash_checksum, O_SIMHASH_CS),
+        ("emb_ivf_topk", q_emb_ivf_topk, O_IVF),
+        ("s8_labels_sink", q_s8_labels_sink, O_S8_SINK),
+        ("e5_conj_from_labels", q_e5_conj_from_labels, O_E5_FROM_LABELS),
+        ("docs_train_split", q_docs_train_split, O_TRAIN_SPLIT),
+        ("docs_pack_sequences", q_docs_pack_sequences, O_PACK),
+        ("docs_tfidf_topk", q_docs_tfidf_topk, O_TFIDF),
+        ("docs_repetition_stats", q_docs_repetition, O_REPETITION),
+        ("docs_pii_scrub", q_docs_pii_scrub, o_docs_pii_scrub()),
+        ("docs_contamination", q_docs_contamination, O_CONTAMINATION),
+        ("docs_neardup_clusters", q_docs_neardup_clusters, o_docs_neardup_clusters()),
+        ("docs_prepare_corpus", q_docs_prepare_corpus, o_docs_prepare_corpus()),
+        ("emb_knn_graph", q_emb_knn_graph, O_KNN),
+        ("e1_matcher_variants", q_e1_matcher_variants, O_E1V),
+        ("e2_carb_ss", q_e2_carb_ss, O_E2_SS),
+        ("kg_graph_edges", q_kg_graph_edges, o_kg_graph_edges()),
+        ("conv_dedup_exact", q_conv_dedup_exact, O_CONV_DEDUP),
+        ("conv_neardup", q_conv_neardup, O_CONV_NEARDUP),
+        ("conv_pack", q_conv_pack, O_CONV_PACK),
+        ("conv_quality", q_conv_quality, O_CONV_QUALITY),
+        ("conv_prepare", q_conv_prepare, o_conv_prepare()),
+        ("docs_heavy_hitters", q_docs_heavy_hitters, O_HEAVY_HITTERS),
+        ("docs_mixture_sample", q_docs_mixture_sample, o_docs_mixture_sample()),
+        ("docs_unigram_logprob", q_docs_unigram_logprob, O_UNIGRAM_LP),
+        ("s10_salted_resume", q_s10_salted_resume, O_S10),
+        ("reader_ollie", q_reader_ollie, O_READER_OLLIE),
+        ("reader_openie4", q_reader_openie4, O_READER_OPENIE4),
+        ("reader_openie5", q_reader_openie5, O_READER_OPENIE5),
+        ("reader_props", q_reader_props, O_READER_PROPS),
+        ("reader_reverb", q_reader_reverb, O_READER_REVERB),
+        ("reader_stanford", q_reader_stanford, O_READER_STANFORD),
+        ("reader_tab", q_reader_tab, O_READER_TAB),
+        ("reader_clausie", q_reader_clausie, O_READER_CLAUSIE),
+        ("reader_benchmark_gold", q_reader_benchmark_gold, O_READER_BGOLD),
+        ("reader_split_tabbed", q_reader_split_tabbed, O_READER_SPLIT_TABBED),
+        ("fmt_readable", q_fmt_readable, O_FMT_READABLE),
+        ("fmt_oie_to_allennlp", q_fmt_oie_to_allennlp, O_FMT_O2A),
+        ("fmt_senseoie", q_fmt_senseoie, O_FMT_SENSEOIE),
+        ("e2_pr_curve", q_e2_pr_curve, O_E2_CURVE),
+        ("reader_wire57", q_reader_wire57, O_READER_WIRE57),
+        ("wire57_scores", q_wire57_scores, O_WIRE57),
+        ("kg_khop", q_kg_khop, o_kg_khop()),
+        ("kg_degree_topk", q_kg_degree_topk, o_kg_degree_topk()),
+        ("kg_pagerank", q_kg_pagerank, o_kg_pagerank()),
+        ("kg_triangles", q_kg_triangles, o_kg_triangles()),
+        ("stream_clean_drain", q_stream_clean_drain, o_stream_clean_drain()),
+        ("e2_carb_sentences", q_e2_carb_sentences, O_E2_SENTENCES),
+        ("e2_stamp_optimal", q_e2_stamp_optimal, O_E2_STAMP),
+        ("kg_merge_edges", q_kg_merge_edges, O_KG_MERGE),
+        ("kg_lpa", q_kg_lpa, o_kg_lpa()),
+    ]

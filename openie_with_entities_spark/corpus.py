@@ -25,13 +25,13 @@ probability to exercise the salted-join skew path.
 from __future__ import annotations
 
 import datetime as dt
-import os
 import random
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .extract.mentions import normalize_surface
 
 SEED = 42
 
@@ -94,16 +94,6 @@ def gazetteer_rows() -> list[dict]:
                 }
             )
     return rows
-
-
-def normalize_surface(s: str) -> str:
-    """Lowercase + strip punctuation, the reference's predicate/surface
-    normalization. SHARED with the mention detector — dictionary surfaces
-    and detected mentions must normalize through the same function or
-    every dictionary match silently breaks."""
-    from .extract.mentions import normalize_surface as _norm
-
-    return _norm(s)
 
 
 # ------------------------------------------------------------- sentence bank
@@ -224,14 +214,3 @@ def alias_dict(spark: SparkSession) -> DataFrame:
         schema="surface_form string, entity_id string, canonical_name string, "
         "ner_type string, prior double",
     )
-
-
-def write_corpus(spark: SparkSession, path: str, n_convs: int, seed: int = SEED) -> None:
-    """Materialize the corpus partitioned the way the 100 TB table would
-    be: files hash-clustered by conv_id (repartition before write), so a
-    downstream conv_id repartition reads co-located conversations."""
-    df = generate_transcripts(spark, n_convs, seed)
-    parallelism = spark.sparkContext.defaultParallelism
-    df.repartition(parallelism, F.col("conv_id")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "transcripts.parquet"))

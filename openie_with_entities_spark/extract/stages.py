@@ -44,6 +44,7 @@ from ..functions.decode import (
     decode_extractions,
     split_by_coordinations,
 )
+from ..session import input_splits
 from .backends import DeterministicBackend
 
 SPLIT_SCHEMA = (
@@ -147,26 +148,22 @@ def _partition_for_inference(df: DataFrame, text_col: str, partitions: int | Non
       * tiny input (few scan splits) → repartition, but only to 4× the
         input's split count instead of cores×3: a 20-conv resume contract
         was paying 96 near-empty Python-worker round trips.
-      * explicit ``partitions`` or a streaming source (no probe available)
-        → the caller-pinned / cores×3 hash repartition, as before.
+      * explicit ``partitions``, a stream, or a plan that already has an
+        exchange → the caller-pinned / cores×3 hash repartition.
 
-    The input-split probe is a plan→RDD conversion, no job.
+    The input-split probe is ``session.input_splits``.
     """
     if partitions is None:
-        partitions = df.sparkSession.sparkContext.defaultParallelism * 3
-        if not df.isStreaming:
-            cores = df.sparkSession.sparkContext.defaultParallelism
-            try:
-                in_splits = df.rdd.getNumPartitions()
-            except Exception:  # pragma: no cover - exotic plans
-                in_splits = None
-            if in_splits and in_splits >= cores:
-                # enough parallelism already — skip the shuffle entirely
-                return df.sortWithinPartitions(
-                    F.size(F.split(F.col(text_col), " "))
-                )
-            if in_splits:
-                partitions = max(min(partitions, in_splits * 4), 1)
+        cores = df.sparkSession.sparkContext.defaultParallelism
+        partitions = cores * 3
+        in_splits = input_splits(df)
+        if in_splits and in_splits >= cores:
+            # enough parallelism already — skip the shuffle entirely
+            return df.sortWithinPartitions(
+                F.size(F.split(F.col(text_col), " "))
+            )
+        if in_splits:
+            partitions = min(partitions, in_splits * 4)
     out = df.repartition(partitions, F.col("conv_id"))
     if out.isStreaming:  # sort unsupported on streams; batches are small
         return out

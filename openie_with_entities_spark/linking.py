@@ -203,8 +203,8 @@ def per_org_pairs(linked_triples: DataFrame) -> DataFrame:
 
 def _norm_phrase(col):
     """Surface normalization for multi-token phrases: lowercase, strip
-    punctuation, collapse/trim whitespace (matches corpus.normalize_surface
-    applied to a token join)."""
+    punctuation, collapse/trim whitespace (matches
+    extract.mentions.normalize_surface applied to a token join)."""
     # \p{L}\p{N}_ mirrors the PYTHON \w the dictionary side uses
     # (extract.mentions.normalize_surface) — Java's bare \w is ASCII-only
     # and would normalize 'Beyoncé' to 'beyonc', so non-ASCII entities

@@ -19,6 +19,8 @@ import pandas as pd  # module level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import input_splits
+
 STOPWORDS = [
     "the", "a", "an", "of", "to", "and", "in", "is", "was", "it", "for",
     "on", "with", "as", "at", "by", "that", "this", "are", "be",
@@ -35,22 +37,6 @@ BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
 def tokenize(col):
     return F.split(col, " ")
-
-
-def text_stats(docs: DataFrame) -> DataFrame:
-    """Integer-valued per-document stats (quality-scoring inputs)."""
-    toks = tokenize(F.col("text"))
-    n_punct = F.size(
-        F.expr(r"regexp_extract_all(text, '[^A-Za-z0-9\\s]', 0)")
-    )
-    n_digits = F.size(F.expr(r"regexp_extract_all(text, '[0-9]', 0)"))
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.length("text").alias("n_chars"),
-        n_punct.alias("n_punct"),
-        n_digits.alias("n_digits"),
-    )
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -600,9 +586,10 @@ def _spread(df: DataFrame, key: str = "doc_id") -> DataFrame:
     ONE input split, which would serialize the CPU-heavy hash projections
     below onto a single core. No-op (no shuffle) when the scan already has
     enough partitions — at 100 TB the reader produces thousands of splits on
-    its own and this never fires."""
+    its own and this never fires; a plan with an exchange always does."""
     target = df.sparkSession.sparkContext.defaultParallelism * 2
-    if df.rdd.getNumPartitions() >= target:
+    in_splits = input_splits(df)
+    if in_splits and in_splits >= target:
         return df
     return df.repartition(target, key)
 
@@ -648,15 +635,6 @@ def shingle_hash_array(k: int = 15):
         F.transform(
             positions, lambda i: F.xxhash64(F.col("text").substr(i, F.lit(k)))
         )
-    )
-
-
-def char_shingles(docs: DataFrame, k: int = 15) -> DataFrame:
-    """Distinct character k-gram shingles per document, one row each —
-    derived shuffle-free from shingle_array (explode of a per-row distinct
-    array ≡ explode + global distinct on (doc_id, shingle))."""
-    return _spread(docs).select(
-        "doc_id", F.explode(shingle_array(k)).alias("shingle")
     )
 
 

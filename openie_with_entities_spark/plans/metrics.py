@@ -11,7 +11,6 @@ the exactly-once record.)
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,11 +38,6 @@ class StageCounters:
         ]
         return spark.createDataFrame(
             rows, "stage string, metric string, value long, at string"
-        )
-
-    def write(self, spark: SparkSession, base_dir: str) -> None:
-        self.to_df(spark).write.mode("append").parquet(
-            os.path.join(base_dir, "metrics")
         )
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Arrow batch size: the unit of work handed to each mapInPandas stage.
 # Big enough to amortize tokenization/model-call overhead, small enough
@@ -79,3 +79,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def input_splits(df: DataFrame) -> int | None:
+    """The split count ``df`` hands the next stage; None for a stream or a
+    plan with an exchange. With AQE on, ``.rdd`` on such a plan runs the
+    upstream shuffle as a job and reads its post-coalesce count (often one
+    split); callers repartition to their full target instead. On an
+    exchange-free plan it runs no job, except to fill a cache that is not
+    yet materialized, which the stage would fill anyway."""
+    if df.isStreaming:
+        return None
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        if node.nodeName().endswith("Exchange"):
+            return None
+        children = node.children()
+        nodes.extend(children.apply(i) for i in range(children.size()))
+    return df.rdd.getNumPartitions()

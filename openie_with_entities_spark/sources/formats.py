@@ -108,22 +108,6 @@ def to_oie_blocks(triples: DataFrame, key_cols: list[str], sentence_col: str) ->
     )
 
 
-def to_conj_blocks(splits: DataFrame, sentence_col: str = "text") -> DataFrame:
-    """Conj-split file blocks: original sentence followed by its splits
-    (identity rows collapse to a single line)."""
-    ordered = F.array_sort(
-        F.collect_list(F.struct("split_idx", "split_text"))
-    )
-    return splits.groupBy("conv_id", "turn_idx", "sent_idx").agg(
-        F.concat_ws(
-            "\n",
-            F.array_join(
-                F.transform(ordered, lambda s: s["split_text"]), "\n"
-            ),
-        ).alias("block")
-    )
-
-
 def _numbered_blocks(spark: SparkSession, path: str) -> DataFrame:
     """Shared scaffolding for blank-line-delimited block files: assign each
     non-blank line a (block_id, pos) via a window-sum over blank-line

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from openie_with_entities_spark import contracts
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
 TABLES = [
@@ -119,3 +120,55 @@ def test_all_queries_emit_sortable_scalar_columns(spark):
             assert not isinstance(
                 f.dataType, (ArrayType, MapType, StructType)
             ), f"{name}.{f.name}: {f.dataType} is not canonicalizer-sortable"
+
+
+def test_registry_records_each_contract_once():
+    """Every contract is one (name, query, oracle) record, and queries() /
+    oracle_sql() are views of that one table."""
+    import importlib.util
+
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    spec = importlib.util.spec_from_file_location(
+        "check_contracts", os.path.join(root, "scripts", "check_contracts.py")
+    )
+    check_contracts = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check_contracts)
+
+    names = [name for name, _, _ in entrymod._contracts()]
+    assert len(names) == len(set(names)), sorted(
+        n for n in set(names) if names.count(n) > 1
+    )
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    assert len(qs) == 111
+    assert set(oracles) <= set(qs)
+    assert set(qs) - set(oracles) == {"docs_simhash", "kg_triples", "approx_stats"}
+    for listed in (
+        entrymod._FIRST_WINDOW,
+        entrymod._PINNED,
+        check_contracts.RECORDED_AT_SF001,
+    ):
+        assert set(listed) <= set(names), set(listed) - set(names)
+
+
+def test_stream_drain_leaves_caller_session_conf(spark, monkeypatch):
+    """The stream-drain contract sizes its state store (8 shuffle
+    partitions) in a session of its own: the caller's session conf never
+    changes, so a query running in it concurrently is unaffected."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "32")
+    seen = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *a, **k):
+        seen.append((
+            caller.conf.get("spark.sql.shuffle.partitions"),
+            self._spark.conf.get("spark.sql.shuffle.partitions"),
+        ))
+        return real_start(self, *a, **k)
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    assert contracts.q_stream_clean_drain(caller, SF_DIR).count() > 0
+    assert seen == [("32", "8")]
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "32"

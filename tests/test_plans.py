@@ -293,3 +293,59 @@ def test_label_propagation_iteration_single_small_shuffle(spark):
     assert not any(
         re.search(r"Exchange hashpartitioning\(b#", l) for l in ensure
     ), steady  # the adjacency must NOT re-shuffle per iteration
+
+
+def _jobs_submitted(spark, build):
+    """``build()``'s result and the number of Spark jobs it submitted."""
+    from uuid import uuid4
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_input_split_probe_submits_no_job(spark):
+    """Sizing a stage's input never runs a job. An input whose plan already
+    has an exchange gets the full-target conv_id repartition (cores×3 for
+    inference, cores×2 for docops): with AQE on, probing it through .rdd
+    ran the upstream shuffle as a job and read its post-coalesce count of
+    one split. A cached repartition(32) input already feeds every core and
+    is mapped over as it is."""
+    from openie_with_entities_spark.extract.fused import fused_extract_stage
+    from openie_with_entities_spark.operators.docops import _spread
+
+    cores = spark.sparkContext.defaultParallelism
+    # two input splits: even if another test cached this input, the dedup
+    # still needs an exchange (a one-split cache would satisfy it as is)
+    t = generate_transcripts(spark, 20, partitions=2)
+    shuffled = t.dropDuplicates(["conv_id", "turn_idx"])
+
+    out, n_jobs = _jobs_submitted(
+        spark, lambda: fused_extract_stage(shuffled, frozenset())
+    )
+    assert n_jobs == 0
+    plan = plan_of(out)
+    assert re.search(rf"hashpartitioning\(conv_id#\d+, {cores * 3}\)", plan), plan
+
+    out, n_jobs = _jobs_submitted(spark, lambda: _spread(shuffled, "conv_id"))
+    assert n_jobs == 0
+    plan = plan_of(out)
+    assert re.search(rf"hashpartitioning\(conv_id#\d+, {cores * 2}\)", plan), plan
+
+    cached = t.repartition(32).cache()
+    cached.count()
+    try:
+        out, n_jobs = _jobs_submitted(
+            spark, lambda: fused_extract_stage(cached, frozenset())
+        )
+        assert n_jobs == 0
+        assert out.rdd.getNumPartitions() == 32
+        plan = plan_of(out)
+        assert "Exchange" not in plan[: plan.index("InMemoryTableScan")], plan
+    finally:
+        cached.unpersist()
