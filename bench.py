@@ -130,7 +130,12 @@ def _emit(payload: dict) -> None:
     to survive the driver's output-tail capture (~2000 chars — round 3's
     full 74-entry per-query map overflowed it and the driver recorded
     `parsed: null`). The complete payload goes to BENCH_full.json; the
-    printed line keeps the summary fields plus the slowest queries."""
+    printed line keeps the summary fields plus the slowest queries, and
+    EVERY query's time as integer ms in payload order (``queries()`` order,
+    then kg_pipeline) with the md5 of that name order: a query that gets
+    faster drops out of the slowest list but never out of the line."""
+    import hashlib
+
     with open("BENCH_full.json", "w") as f:
         json.dump(payload, f, indent=1)
     compact = {k: v for k, v in payload.items() if k != "queries"}
@@ -143,6 +148,10 @@ def _emit(payload: dict) -> None:
     compact["queries"] = slowest
     compact["n_queries_total"] = len(queries)
     compact["queries_full"] = "BENCH_full.json"
+    compact["queries_ms"] = [round(v * 1000) for v in queries.values()]
+    compact["queries_order_md5"] = hashlib.md5(
+        "\n".join(queries).encode()
+    ).hexdigest()
     line = json.dumps(compact)
     if len(line) > 1900:  # belt and braces: shrink but KEEP kg_pipeline
         keep5 = dict(list(slowest.items())[:5])

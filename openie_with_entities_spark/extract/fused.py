@@ -1,5 +1,5 @@
 """Fused extraction stage: segmentation + conj-split + OIE + per-sentence
-dedup + mention linking summary in ONE mapInPandas pass over raw turns.
+dedup + mention linking summary in ONE mapInArrow pass over raw turns.
 
 The modular stages (segment.py, stages.py, mentions.py) exist for parity
 testing and for deployments where the conj and OIE models run on different
@@ -14,8 +14,13 @@ between stages. Fusing the per-sentence pipeline:
     (/root/reference/model.py:595-634) in-UDF (all splits of a sentence are
     computed together), removing the window-dedup shuffle;
   * reduces the job to AT MOST one shuffle: the explicit conv_id
-    repartition — and since round 7 even that is skipped when the input
-    scan already feeds every core (see stages._partition_for_inference).
+    repartition, only when the input has too few splits or an exchange AQE
+    may coalesce. An input with cores to cores×3 splits is mapped over as
+    it is, and a larger one is coalesced to cores×3 tasks, each paying the
+    fixed Python-task cost once (stages._partition_for_inference);
+  * hands the Arrow record batches to ``run`` as they are (``mapInArrow``)
+    and builds the output batch straight from Python lists: no pandas
+    frame on either side of the body.
 
 The per-text work is the modular stages' own: ``run`` segments and
 length-guards each turn, resolves every sentence instance through
@@ -33,9 +38,10 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.decode import SENTINELS, extraction_key, normalize_quotes
 from ..oracle import MAX_WORDS_WITH_SENTINELS, segment_text
@@ -43,12 +49,16 @@ from .backends import DeterministicBackend
 from .mentions import _spans, normalize_surface
 from .stages import _partition_for_inference, conj_kernel, oie_kernel, per_distinct
 
-FUSED_SCHEMA = (
-    "conv_id string, turn_idx int, sent_idx int, split_idx int, ext_idx int, "
-    "arg1 string, rel string, arg2 string, confidence double, "
-    "arg1_surface string, arg1_n_mentions int, "
-    "arg2_surface string, arg2_n_mentions int"
-)
+# the flat schema of every batch ``run`` yields; FUSED_SCHEMA is its Spark twin
+FUSED_ARROW_SCHEMA = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("sent_idx", pa.int32()),
+    ("split_idx", pa.int32()), ("ext_idx", pa.int32()),
+    ("arg1", pa.string()), ("rel", pa.string()), ("arg2", pa.string()),
+    ("confidence", pa.float64()),
+    ("arg1_surface", pa.string()), ("arg1_n_mentions", pa.int32()),
+    ("arg2_surface", pa.string()), ("arg2_n_mentions", pa.int32()),
+])
+FUSED_SCHEMA = from_arrow_schema(FUSED_ARROW_SCHEMA)
 
 
 def _link_summary(text: str, surfaces: frozenset[str]) -> tuple[str | None, int]:
@@ -87,7 +97,7 @@ def fused_extract_stage(
     row."""
     backend = backend or DeterministicBackend()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         memo: dict[str, tuple[list[tuple], int, int]] = {}
         link_memo: dict[str, tuple[str | None, int]] = {}
 
@@ -123,18 +133,13 @@ def fused_extract_stage(
                 for rows, nsp, ndd in per_sent
             ]
 
-        for pdf in batches:
+        for batch in batches:
             n_sent = n_long = n_splits = n_ext = n_dedup = 0
-            out: dict[str, list] = {k: [] for k in (
-                "conv_id", "turn_idx", "sent_idx", "split_idx", "ext_idx",
-                "arg1", "rel", "arg2", "confidence",
-                "arg1_surface", "arg1_n_mentions",
-                "arg2_surface", "arg2_n_mentions",
-            )}
+            out: dict[str, list] = {k: [] for k in FUSED_ARROW_SCHEMA.names}
             instances: list = []  # (conv_id, turn_idx, sent_idx)
             texts: list[str] = []
             for conv_id, turn_idx, turn_text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
+                *(batch.column(c).to_pylist() for c in ("conv_id", "turn_idx", "text"))
             ):
                 for sent_idx, raw in enumerate(segment_text(turn_text)):
                     n_sent += 1
@@ -166,17 +171,17 @@ def fused_extract_stage(
                     out["arg2_surface"].append(s2)
                     out["arg2_n_mentions"].append(n2)
             if counters is not None:
-                counters.add("turns_in", len(pdf))
+                counters.add("turns_in", batch.num_rows)
                 counters.add("sentences_in", n_sent)
                 counters.add("sentences_too_long", n_long)
                 counters.add("splits_out", n_splits)
                 counters.add("extractions_out", n_ext)
                 counters.add("extractions_deduped", n_dedup)
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pydict(out, schema=FUSED_ARROW_SCHEMA)
 
     turns = transcripts.where(
         F.col("text").isNotNull() & (F.col("text") != "")
     ).select("conv_id", "turn_idx", "text")
-    return _partition_for_inference(turns, "text", partitions).mapInPandas(
+    return _partition_for_inference(turns, "text", partitions).mapInArrow(
         run, schema=FUSED_SCHEMA
     )

@@ -44,7 +44,7 @@ from ..functions.decode import (
     decode_extractions,
     split_by_coordinations,
 )
-from ..session import input_splits
+from ..session import fit_partitions
 from .backends import DeterministicBackend
 
 SPLIT_SCHEMA = (
@@ -130,41 +130,28 @@ def oie_kernel(backend, texts: list[str]) -> list[list[tuple]]:
 
 
 def _partition_for_inference(df: DataFrame, text_col: str, partitions: int | None) -> DataFrame:
-    """Explicit conv_id-hash repartition with a PINNED partition count.
+    """The stage's input layout, then a per-partition length sort.
 
-    The count must be explicit: AQE's coalescing optimizes for shuffle-block
-    size and would shrink a text-sized corpus to a handful of partitions —
-    correct for IO-bound SQL, disastrous for a CPU-bound model stage (7 of
-    32 cores busy, measured). Inference stages are compute-bound, so
-    parallelism follows cores (×3 for stragglers), not bytes — but the
-    shuffle exists to FIX a parallelism deficit, not as a ritual (round 7,
-    guide §2.4: remove shuffles outright where the input is already
-    partitioned well enough):
+    The count is explicit, never AQE's: AQE's coalescing optimizes for
+    shuffle-block size and would shrink a text-sized corpus to a handful of
+    partitions — correct for IO-bound SQL, disastrous for a CPU-bound model
+    stage (7 of 32 cores busy, measured). Inference stages are compute-bound,
+    so parallelism follows cores (×3 for stragglers), not bytes:
 
-      * input already has ≥ cores partitions (any healthy production scan —
-        thousands of splits at 100 TB) → NO shuffle at all; the stage maps
-        over the scan splits and only the per-partition length sort runs.
-        Extraction is per-row, so placement never changes results.
-      * tiny input (few scan splits) → repartition, but only to 4× the
-        input's split count instead of cores×3: a 20-conv resume contract
-        was paying 96 near-empty Python-worker round trips.
-      * explicit ``partitions``, a stream, or a plan that already has an
-        exchange → the caller-pinned / cores×3 hash repartition.
-
-    The input-split probe is ``session.input_splits``.
+      * explicit ``partitions`` → that many conv_id hash partitions;
+      * otherwise ``session.fit_partitions`` to cores×3: a conv_id hash
+        repartition only for a stream, an exchange AQE may coalesce, or an
+        input with fewer splits than cores (then to at most 4× its splits,
+        each a Python task launch);
+        an input with cores to cores×3 splits is mapped over as it is, and
+        a larger one is coalesced to cores×3 tasks, with no shuffle either
+        way. Extraction is per-row, so placement never changes results.
     """
     if partitions is None:
         cores = df.sparkSession.sparkContext.defaultParallelism
-        partitions = cores * 3
-        in_splits = input_splits(df)
-        if in_splits and in_splits >= cores:
-            # enough parallelism already — skip the shuffle entirely
-            return df.sortWithinPartitions(
-                F.size(F.split(F.col(text_col), " "))
-            )
-        if in_splits:
-            partitions = min(partitions, in_splits * 4)
-    out = df.repartition(partitions, F.col("conv_id"))
+        out = fit_partitions(df, cores * 3, "conv_id", per_split=4)
+    else:
+        out = df.repartition(partitions, F.col("conv_id"))
     if out.isStreaming:  # sort unsupported on streams; batches are small
         return out
     return out.sortWithinPartitions(F.size(F.split(F.col(text_col), " ")))

@@ -19,7 +19,7 @@ import pandas as pd  # module level: pandas_udf type hints must resolve
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import input_splits
+from ..session import fit_partitions
 
 STOPWORDS = [
     "the", "a", "an", "of", "to", "and", "in", "is", "was", "it", "for",
@@ -582,16 +582,14 @@ def winnowing_fingerprint(
 
 
 def _spread(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Rebalance tiny scans across cores. A small local parquet arrives as
-    ONE input split, which would serialize the CPU-heavy hash projections
-    below onto a single core. No-op (no shuffle) when the scan already has
-    enough partitions — at 100 TB the reader produces thousands of splits on
-    its own and this never fires; a plan with an exchange always does."""
+    """Lay a scan out for the CPU-heavy hash projections below:
+    ``session.fit_partitions`` to cores×2. A small local parquet arrives as
+    ONE input split, which would serialize them onto one core, so it is hash
+    repartitioned to the full cores×2: these projections run in the JVM,
+    where a task costs little to launch. A scan with more than cores×2
+    splits is coalesced to cores×2 tasks without a shuffle."""
     target = df.sparkSession.sparkContext.defaultParallelism * 2
-    in_splits = input_splits(df)
-    if in_splits and in_splits >= target:
-        return df
-    return df.repartition(target, key)
+    return fit_partitions(df, target, key, per_split=target)
 
 
 def dedup_exact(docs: DataFrame) -> DataFrame:

@@ -7,8 +7,8 @@ README.md:62), as one declarative DataFrame DAG.
 
 Each arrow is either native Spark SQL or one of the mapInPandas stages; the
 whole DAG has at most two shuffles before linking (the conv_id repartition
-in front of the conj stage — skipped since round 7 when the input scan
-already feeds every core — and the dedup/rank window aggregate).
+in front of the conj stage — skipped when the input already feeds every
+core, see session.fit_partitions — and the dedup/rank window aggregate).
 """
 
 from __future__ import annotations
@@ -89,10 +89,12 @@ def build_kg_fused(
     partitions: int | None = None,
     backend=None,
 ) -> DataFrame:
-    """Production/bench path: ONE mapInPandas pass over raw turns
+    """Production/bench path: ONE mapInArrow pass over raw turns
     (segment + conj + OIE + dedup + mention summary fused) and map-literal
-    linking — at most one shuffle (the conv_id repartition, skipped when
-    the input scan already feeds every core) in the whole job.
+    linking — at most one shuffle in the whole job: the conv_id
+    repartition, for an input with fewer splits than cores or an exchange
+    AQE may coalesce. An input with more than cores×3 splits is coalesced
+    to cores×3 fused tasks without a shuffle (session.fit_partitions).
     Result is identical to build_kg's linked_triples minus the
     n_mentions-null nuance (fused reports 0 where the modular left join
     reports null for mention-less args).

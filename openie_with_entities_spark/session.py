@@ -82,22 +82,63 @@ def get_spark(
 
 
 def input_splits(df: DataFrame) -> int | None:
-    """The split count ``df`` hands the next stage; None for a stream or a
-    plan with an exchange. With AQE on, ``.rdd`` on such a plan runs the
-    upstream shuffle as a job and reads its post-coalesce count (often one
-    split); callers repartition to their full target instead. On an
-    exchange-free plan it runs no job, except to fill a cache that is not
-    yet materialized, which the stage would fill anyway."""
+    """The split count ``df`` hands the next stage, read without a job;
+    None for a stream or a plan whose count is not fixed before it runs.
+
+    A user ``repartition(n)`` (a ShuffleExchangeExec of origin
+    REPARTITION_BY_NUM, which AQE never coalesces) fixes the count: with
+    only such exchanges in the AQE initial plan, the root's
+    ``outputPartitioning`` carries it. Any other exchange returns None, as
+    does an unknown root partitioning: with AQE on, ``.rdd`` on such a plan
+    would run the upstream shuffle as a job and read its post-coalesce count
+    (often one split). On an exchange-free plan ``.rdd`` runs no job, except
+    to fill a cache that is not yet materialized, which the stage would fill
+    anyway."""
     if df.isStreaming:
         return None
     plan = df._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
         plan = plan.initialPlan()
-    nodes = [plan]
+    nodes, exchanged = [plan], False
     while nodes:
         node = nodes.pop()
         if node.nodeName().endswith("Exchange"):
-            return None
+            if (
+                node.getClass().getSimpleName() != "ShuffleExchangeExec"
+                or node.shuffleOrigin().toString() != "REPARTITION_BY_NUM"
+            ):
+                return None
+            exchanged = True
         children = node.children()
         nodes.extend(children.apply(i) for i in range(children.size()))
+    if exchanged:
+        return plan.outputPartitioning().numPartitions() or None
     return df.rdd.getNumPartitions()
+
+
+def fit_partitions(df: DataFrame, target: int, key: str, per_split: int) -> DataFrame:
+    """``df`` laid out for a CPU-bound stage that works row by row, so the
+    layout never changes its results: the task count is bounded from both
+    sides by the input's split count (``input_splits``).
+
+      * unknown → hash repartition to ``target`` on ``key``;
+      * fewer splits than cores → hash repartition to ``min(target,
+        per_split × splits)``. The caller sets ``per_split`` by what a task
+        costs to launch: 4 for a Python stage (a one-split input pays 4
+        Python tasks, not ``target``), ``target`` for a JVM projection
+        (cheap tasks, so a small input is spread over the full target);
+      * cores up to ``target`` splits → as it is, no shuffle;
+      * more than ``target`` → ``coalesce(target)``, no shuffle: each task
+        reads several adjacent splits, so a fixed per-task cost (0.16-0.5 s
+        for a Python task on 4 cores) is paid ``target`` times, not once
+        per split.
+    """
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    splits = input_splits(df)
+    if not splits:
+        return df.repartition(target, key)
+    if splits < cores:
+        return df.repartition(min(target, per_split * splits), key)
+    if splits > target:
+        return df.coalesce(target)
+    return df

@@ -4,7 +4,7 @@ arriving transcript partitions.
 The reference is batch-only; this is the engine's forward path for a live
 transcript feed. Late/duplicate turns are handled with a watermark +
 ``dropDuplicatesWithinWatermark`` on (conv_id, turn_idx); the fused
-extraction stage applies unchanged to the streaming DataFrame (mapInPandas
+extraction stage applies unchanged to the streaming DataFrame (mapInArrow
 is streaming-compatible), and ``foreachBatch`` gives exactly-once appends to
 the triples table plus per-batch lineage rows — the streaming twin of
 plans.checkpoint.

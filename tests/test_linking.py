@@ -119,55 +119,61 @@ def test_canonicalize_aliases_cluster(spark, triples, mentions, aliases):
 def test_checkpoint_resume(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("ckpt"))
     t = generate_transcripts(spark, 20).cache()
-    mgr = CheckpointManager(spark, base, n_buckets=8)
+    try:
+        mgr = CheckpointManager(spark, base, n_buckets=8)
 
-    def transform(df):
-        return df.select("conv_id", "turn_idx", F.length("text").alias("n"))
+        def transform(df):
+            return df.select("conv_id", "turn_idx", F.length("text").alias("n"))
 
-    r1 = mgr.run_stage("lens", t, transform)
-    assert r1.buckets_processed == 8 and r1.buckets_skipped == 0
-    n1 = r1.output.count()
+        r1 = mgr.run_stage("lens", t, transform)
+        assert r1.buckets_processed == 8 and r1.buckets_skipped == 0
+        n1 = r1.output.count()
 
-    # resume: nothing recomputed, same output
-    r2 = mgr.run_stage("lens", t, transform)
-    assert r2.buckets_processed == 0 and r2.buckets_skipped == 8
-    assert r2.output.count() == n1
+        # resume: nothing recomputed, same output
+        r2 = mgr.run_stage("lens", t, transform)
+        assert r2.buckets_processed == 0 and r2.buckets_skipped == 8
+        assert r2.output.count() == n1
 
-    # lineage covers all buckets exactly once
-    lin = mgr.lineage("lens")
-    assert lin.count() == 8
-    assert lin.agg(F.sum("rows_out")).collect()[0][0] == n1
+        # lineage covers all buckets exactly once
+        lin = mgr.lineage("lens")
+        assert lin.count() == 8
+        assert lin.agg(F.sum("rows_out")).collect()[0][0] == n1
+    finally:
+        t.unpersist()
 
 
 def test_checkpoint_partial_resume(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("ckpt2"))
     t = generate_transcripts(spark, 20).cache()
-    full = CheckpointManager(spark, base, n_buckets=8)
+    try:
+        full = CheckpointManager(spark, base, n_buckets=8)
 
-    # simulate an interrupted run: only half the buckets got lineage
-    from openie_with_entities_spark.plans.checkpoint import with_bucket
+        # simulate an interrupted run: only half the buckets got lineage
+        from openie_with_entities_spark.plans.checkpoint import with_bucket
 
-    def transform(df):
-        return df.select("conv_id", "turn_idx", F.length("text").alias("n"))
+        def transform(df):
+            return df.select("conv_id", "turn_idx", F.length("text").alias("n"))
 
-    half_input = with_bucket(t, 8).where(F.col("_bucket") < 4).drop("_bucket")
-    full.run_stage("lens", half_input, transform)
-    done_before = full.completed_buckets("lens")
-    assert done_before == set(range(8))  # all buckets marked (empty ones too)
+        half_input = with_bucket(t, 8).where(F.col("_bucket") < 4).drop("_bucket")
+        full.run_stage("lens", half_input, transform)
+        done_before = full.completed_buckets("lens")
+        assert done_before == set(range(8))  # all buckets marked (empty ones too)
 
-    # a stricter partial: wipe lineage for buckets >= 4 by rebuilding
-    base2 = str(tmp_path_factory.mktemp("ckpt3"))
-    mgr = CheckpointManager(spark, base2, n_buckets=8)
-    mgr.run_stage("lens", half_input, transform)
-    import shutil, os
+        # a stricter partial: wipe lineage for buckets >= 4 by rebuilding
+        base2 = str(tmp_path_factory.mktemp("ckpt3"))
+        mgr = CheckpointManager(spark, base2, n_buckets=8)
+        mgr.run_stage("lens", half_input, transform)
+        import shutil, os
 
-    # now full input: buckets 0-3 skipped, 4-7 processed — but lineage says
-    # all done; emulate crash-before-lineage by deleting lineage dir
-    shutil.rmtree(os.path.join(base2, "lens", "lineage"))
-    r = mgr.run_stage("lens", t, transform)
-    assert r.buckets_processed == 8
-    expected = t.count()
-    assert r.output.count() == expected
+        # now full input: buckets 0-3 skipped, 4-7 processed — but lineage says
+        # all done; emulate crash-before-lineage by deleting lineage dir
+        shutil.rmtree(os.path.join(base2, "lens", "lineage"))
+        r = mgr.run_stage("lens", t, transform)
+        assert r.buckets_processed == 8
+        expected = t.count()
+        assert r.output.count() == expected
+    finally:
+        t.unpersist()
 
 
 def test_connected_components_at_scale(spark, steal_ratio):

@@ -295,8 +295,8 @@ def test_label_propagation_iteration_single_small_shuffle(spark):
     ), steady  # the adjacency must NOT re-shuffle per iteration
 
 
-def _jobs_submitted(spark, build):
-    """``build()``'s result and the number of Spark jobs it submitted."""
+def _job_ids(spark, build):
+    """``build()``'s result and the ids of the Spark jobs it submitted."""
     from uuid import uuid4
 
     sc = spark.sparkContext
@@ -306,7 +306,13 @@ def _jobs_submitted(spark, build):
         out = build()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_submitted(spark, build):
+    """``build()``'s result and the number of Spark jobs it submitted."""
+    out, ids = _job_ids(spark, build)
+    return out, len(ids)
 
 
 def test_input_split_probe_submits_no_job(spark):
@@ -315,7 +321,7 @@ def test_input_split_probe_submits_no_job(spark):
     inference, cores×2 for docops): with AQE on, probing it through .rdd
     ran the upstream shuffle as a job and read its post-coalesce count of
     one split. A cached repartition(32) input already feeds every core and
-    is mapped over as it is."""
+    is coalesced to at most cores×3 tasks, with no exchange."""
     from openie_with_entities_spark.extract.fused import fused_extract_stage
     from openie_with_entities_spark.operators.docops import _spread
 
@@ -344,8 +350,82 @@ def test_input_split_probe_submits_no_job(spark):
             spark, lambda: fused_extract_stage(cached, frozenset())
         )
         assert n_jobs == 0
-        assert out.rdd.getNumPartitions() == 32
+        assert out.rdd.getNumPartitions() == min(32, cores * 3)
         plan = plan_of(out)
         assert "Exchange" not in plan[: plan.index("InMemoryTableScan")], plan
+    finally:
+        cached.unpersist()
+
+
+def test_input_split_probe_reads_user_repartition_count(spark):
+    """A user repartition(n) fixes the split count in the plan (AQE never
+    coalesces it), so the probe reads n with no job: a generated 20-conv
+    input (one split) gets 4 fused partitions, not cores×3 (on one core it
+    is left as it is). An exchange AQE may coalesce still gets the full
+    cores×3."""
+    from openie_with_entities_spark.extract.fused import fused_extract_stage
+
+    cores = spark.sparkContext.defaultParallelism
+    out, n_jobs = _jobs_submitted(
+        spark, lambda: fused_extract_stage(generate_transcripts(spark, 20), frozenset())
+    )
+    assert n_jobs == 0
+    plan = plan_of(out)
+    if cores > 1:  # one split, fewer than cores: 4 per split, at most cores×3
+        assert re.search(rf"hashpartitioning\(conv_id#\d+, {min(cores * 3, 4)}\)", plan), plan
+    else:  # one split already feeds the one core
+        assert "hashpartitioning(conv_id" not in plan, plan
+
+    # two splits: the dedup needs its own (coalescible) exchange
+    shuffled = generate_transcripts(spark, 20, partitions=2).dropDuplicates(
+        ["conv_id", "turn_idx"]
+    )
+    out, n_jobs = _jobs_submitted(
+        spark, lambda: fused_extract_stage(shuffled, frozenset())
+    )
+    assert n_jobs == 0
+    plan = plan_of(out)
+    assert re.search(rf"hashpartitioning\(conv_id#\d+, {cores * 3}\)", plan), plan
+
+
+def test_spread_fans_small_scan_out_to_full_target(spark, tmp_path):
+    """docops._spread's projections run in the JVM, where a task costs
+    little to launch, so a one-split scan is hash repartitioned to the full
+    cores×2, not to the fused stage's 4 partitions per split."""
+    from openie_with_entities_spark.operators.docops import _spread
+
+    cores = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "docs")
+    spark.range(64).selectExpr("id AS doc_id").coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert docs.rdd.getNumPartitions() == 1
+    plan = plan_of(_spread(docs))
+    if cores > 1:
+        assert re.search(rf"hashpartitioning\(doc_id#\d+L?, {cores * 2}\)", plan), plan
+    else:  # one split already feeds the one core
+        assert "Exchange" not in plan, plan
+
+
+def test_over_split_input_coalesces_to_fused_target(spark):
+    """An input with 3× the fused target's splits runs in exactly cores×3
+    fused tasks, with no shuffle, and yields the rows an explicit conv_id
+    repartition yields."""
+    cores = spark.sparkContext.defaultParallelism
+    alias = alias_dict(spark)
+    cached = generate_transcripts(spark, 40, partitions=9 * cores).cache()
+    cached.count()
+    try:
+        linked = build_kg_fused(cached, alias)
+        plan = plan_of(linked)
+        assert "Exchange" not in plan[: plan.index("InMemoryTableScan")], plan
+        rows, jobs = _job_ids(spark, lambda: sorted(linked.collect()))
+        tracker = spark.sparkContext.statusTracker()
+        # tasks run per stage; the skipped stage that built the cache runs none
+        tasks = [
+            tracker.getStageInfo(s).numCompletedTasks
+            for j in jobs for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert [n for n in tasks if n] == [cores * 3], tasks
+        assert rows == sorted(build_kg_fused(cached, alias, partitions=cores).collect())
     finally:
         cached.unpersist()
