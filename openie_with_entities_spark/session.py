@@ -129,9 +129,11 @@ def fit_partitions(df: DataFrame, target: int, key: str, per_split: int) -> Data
         (cheap tasks, so a small input is spread over the full target);
       * cores up to ``target`` splits → as it is, no shuffle;
       * more than ``target`` → ``coalesce(target)``, no shuffle: each task
-        reads several adjacent splits, so a fixed per-task cost (0.16-0.5 s
-        for a Python task on 4 cores) is paid ``target`` times, not once
-        per split.
+        reads several adjacent splits, so a fixed per-task cost (~15 ms of
+        Python CPU and ~60 ms of wall for a trivial Python task on 4 cores)
+        is paid ``target`` times, not once per split. It was ~160 ms of CPU
+        until the package stopped the worker re-reading Spark's zip
+        archives at every task start (``_reread_zips_only_when_changed``).
     """
     cores = df.sparkSession.sparkContext.defaultParallelism
     splits = input_splits(df)

@@ -4,6 +4,9 @@ column names, and value hash (columns sorted by name, rows sorted by all
 columns — the driver's canonicalization). Usage:
 
     python scripts/check_contracts.py [sf_dir] [key ...]
+
+Prints one OK/ROWS/SKIP/FAIL line per contract, then one final
+``SUMMARY ok=<n> rows=<n> skip=<n> fail=<n>`` line; exits 1 on any FAIL.
 """
 
 from __future__ import annotations
@@ -50,7 +53,11 @@ def main() -> int:
 
     import __spark_entry__ as entry
 
-    spark = get_spark("check_contracts", cores=16)
+    # no console progress bar: its redraws would split the result lines
+    spark = get_spark(
+        "check_contracts", cores=16,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -60,7 +67,7 @@ def main() -> int:
     qs = entry.queries()
     oracles = entry.oracle_sql()
     keys = sys.argv[2:] or list(qs)
-    n_bad = 0
+    n_bad = n_ok = n_rows = n_skip = 0
     is_sf001 = sf_dir.rstrip("/").endswith("sf0.01")
     for key in keys:
         if key not in qs:
@@ -69,6 +76,7 @@ def main() -> int:
             continue
         if not is_sf001 and key in RECORDED_AT_SF001:
             print(f"SKIP {key}: oracle recorded at sf0.01 only")
+            n_skip += 1
             continue
         try:
             s_pdf = qs[key](spark, sf_dir).toPandas()
@@ -78,6 +86,7 @@ def main() -> int:
             continue
         if key not in oracles:
             print(f"ROWS {key}: {len(s_pdf)} rows (no oracle)")
+            n_rows += 1
             continue
         try:
             o_pdf = con.execute(oracles[key]).df()
@@ -101,7 +110,9 @@ def main() -> int:
                 print(diff.head(8).to_string())
         else:
             print(f"OK   {key}: {ns} rows")
+            n_ok += 1
     spark.stop()
+    print(f"SUMMARY ok={n_ok} rows={n_rows} skip={n_skip} fail={n_bad}")
     return 1 if n_bad else 0
 
 
