@@ -1,5 +1,5 @@
 """Fused extraction stage: segmentation + conj-split + OIE + per-sentence
-dedup + mention linking summary in ONE mapInArrow pass over raw turns.
+dedup + entity linking in ONE mapInArrow pass over raw turns.
 
 The modular stages (segment.py, stages.py, mentions.py) exist for parity
 testing and for deployments where the conj and OIE models run on different
@@ -30,10 +30,12 @@ length-guards each turn, resolves every sentence instance through
 and ``stages.oie_kernel`` — and replays the per-sentence rows per instance.
 Equivalence with the modular path is asserted by tests/test_fused.py.
 
-Linking summary: the stage takes the (broadcast-sized, deduplicated)
-dictionary SURFACE SET and emits, per argument, the first dictionary-matched
-mention surface and the matched-mention count; entity resolution stays
-JVM-side (map-literal / broadcast join) in linking.link_triples_inline.
+Linking: the stage takes the broadcast-sized dictionary as a Python dict,
+surface form → (entity_id, ner_type), one best alias per surface
+(linking.dictionary_surfaces), and emits, per argument, the entity of the
+first dictionary-matched mention and the matched-mention count. The link is
+one dict probe per mention of a distinct argument text, memoized like the
+extraction, so the plan carries no dictionary and needs no join.
 """
 
 from __future__ import annotations
@@ -57,41 +59,45 @@ FUSED_ARROW_SCHEMA = pa.schema([
     ("split_idx", pa.int32()), ("ext_idx", pa.int32()),
     ("arg1", pa.string()), ("rel", pa.string()), ("arg2", pa.string()),
     ("confidence", pa.float64()),
-    ("arg1_surface", pa.string()), ("arg1_n_mentions", pa.int32()),
-    ("arg2_surface", pa.string()), ("arg2_n_mentions", pa.int32()),
+    ("arg1_n_mentions", pa.int32()), ("arg2_n_mentions", pa.int32()),
+    ("arg1_entity_id", pa.string()), ("arg1_ner_type", pa.string()),
+    ("arg2_entity_id", pa.string()), ("arg2_ner_type", pa.string()),
 ])
 FUSED_SCHEMA = from_arrow_schema(FUSED_ARROW_SCHEMA)
 
 
-def _link_summary(text: str, surfaces: frozenset[str]) -> tuple[str | None, int]:
-    """(first dictionary-matched mention surface, matched count) for one arg."""
+def _link_summary(
+    text: str, dictionary: dict[str, tuple[str, str]]
+) -> tuple[str | None, str | None, int]:
+    """(entity_id, ner_type, matched count) for one arg: the entity is the
+    first dictionary-matched mention's."""
     tokens = text.split()
-    first = None
+    first = (None, None)
     n = 0
     for (s, e) in _spans(tokens):
-        surf = normalize_surface(" ".join(tokens[s : e + 1]))
-        if surf in surfaces:
+        entity = dictionary.get(normalize_surface(" ".join(tokens[s : e + 1])))
+        if entity is not None:
             n += 1
-            if first is None:
-                first = surf
-    return first, n
+            if n == 1:
+                first = entity
+    return (*first, n)
 
 
 def fused_extract_stage(
     transcripts: DataFrame,
-    surfaces: frozenset[str],
+    dictionary: dict[str, tuple[str, str]],
     partitions: int | None = None,
     counters=None,
     backend=None,
 ) -> DataFrame:
-    """turns → deduped triples with per-arg link summaries.
+    """turns → deduped, entity-linked triples.
 
     At most TWO backend calls per Arrow batch — conj labels for the batch's
     NEW distinct sentences, then OIE labels for their split sentences — the
     same two batched forward passes as the reference's predict loops,
     colocated. Repeated sentences — boilerplate, fillers, quoted turns —
     cost one dict probe instead of a model call: ``stages.per_distinct``
-    memos per sentence text and, for the link summary, per argument text,
+    memos per sentence text and, for the entity link, per argument text,
     and replays row-identically, counters included.
 
     ``counters``: optional plans.metrics.StageCounters (FUSED_COUNTERS set)
@@ -101,10 +107,10 @@ def fused_extract_stage(
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         memo: dict[str, tuple[list[tuple], int, int]] = {}
-        link_memo: dict[str, tuple[str | None, int]] = {}
+        link_memo: dict[str, tuple[str | None, str | None, int]] = {}
 
-        def link(texts: list[str]) -> list[tuple[str | None, int]]:
-            return [_link_summary(t, surfaces) for t in texts]
+        def link(texts: list[str]) -> list[tuple[str | None, str | None, int]]:
+            return [_link_summary(t, dictionary) for t in texts]
 
         def extract(texts: list[str]) -> list[tuple[list[tuple], int, int]]:
             """Per sentence: (row templates, n splits, n deduped) — all
@@ -158,7 +164,7 @@ def fused_extract_stage(
                 n_dedup += ndd
                 n_ext += len(rows_t)
                 for (split_idx, ext_idx, arg1, rel, arg2, conf,
-                     s1, n1, s2, n2) in rows_t:
+                     e1, t1, n1, e2, t2, n2) in rows_t:
                     out["conv_id"].append(conv_id)
                     out["turn_idx"].append(turn_idx)
                     out["sent_idx"].append(sent_idx)
@@ -168,10 +174,12 @@ def fused_extract_stage(
                     out["rel"].append(rel)
                     out["arg2"].append(arg2)
                     out["confidence"].append(conf)
-                    out["arg1_surface"].append(s1)
                     out["arg1_n_mentions"].append(n1)
-                    out["arg2_surface"].append(s2)
                     out["arg2_n_mentions"].append(n2)
+                    out["arg1_entity_id"].append(e1)
+                    out["arg1_ner_type"].append(t1)
+                    out["arg2_entity_id"].append(e2)
+                    out["arg2_ner_type"].append(t2)
             if counters is not None:
                 counters.add("turns_in", batch.num_rows)
                 counters.add("sentences_in", n_sent)

@@ -5,7 +5,11 @@ entity-ending-object rewrite (/root/reference/scripts/pubmed_analysis.py:57-84,
 scripts/baselines.py:50-88); the engine generalizes this to a dictionary
 join, the north rule's hot spot at 10^12 turns:
 
-  * ``link_mentions`` (default): ``broadcast(alias)`` — the dictionary is a
+  * ``dictionary_surfaces`` (the fused and production default): the
+    deduplicated dictionary is collected once and handed to the fused
+    extraction stage, which links each argument with a dict probe: a
+    broadcast hash join with no join in the plan and no mention table.
+  * ``link_mentions``: ``broadcast(alias)`` — the dictionary is a
     dimension table; no shuffle of the (huge) mention side at all.
   * ``link_mentions_salted``: when the dictionary outgrows broadcast, both
     sides shuffle — and a handful of hot surface forms ("Acme Corp",
@@ -133,60 +137,16 @@ def link_triples(
     return triples.join(per_ext, key, "left")
 
 
-def dictionary_surfaces(alias: DataFrame) -> frozenset[str]:
-    """The deduplicated surface set handed to the fused stage (broadcast
-    regime by contract — for huge dictionaries use the salted join path)."""
-    return frozenset(
-        r.surface_form for r in alias.select("surface_form").distinct().collect()
-    )
-
-
-def link_triples_inline(triples_with_surfaces: DataFrame, alias: DataFrame) -> DataFrame:
-    """Zero-shuffle linking for broadcast-sized dictionaries: the deduped
-    dictionary becomes a Spark MAP LITERAL and each argument's pre-computed
-    first-matched surface (from extract.fused) resolves through it — the
-    whole link is codegen'd projection work, the moral equivalent of a
-    broadcast-hash-join without even the join.
-
-    For dictionaries beyond literal/broadcast size, use
+def dictionary_surfaces(alias: DataFrame) -> dict[str, tuple[str, str]]:
+    """The broadcast-regime dictionary handed to the fused stage, which links
+    each argument through it in Python: surface form → (entity_id,
+    ner_type) of the surface's best alias (``_best_alias_per_surface``),
+    from one driver collect. For dictionaries too big to collect, use
     ``link_mentions_salted`` + ``link_triples`` instead."""
-    best = _best_alias_per_surface(alias).collect()
-    entries: list = []
-    for r in best:
-        entries.append(F.lit(r.surface_form))
-        entries.append(
-            F.struct(
-                F.lit(r.entity_id).alias("entity_id"),
-                F.lit(r.ner_type).alias("ner_type"),
-            )
-        )
-    dict_map = F.create_map(*entries)
-
-    # Both lookups run inside ONE higher-order transform projected as a
-    # single column, so the (constant-folded) map literal appears exactly
-    # once in the optimized plan. Four direct try_element_at references
-    # would plant four copies of the full dictionary (CollapseProject
-    # inlines the folded literal); the non-foldable transform is not
-    # inlined, so the downstream field extractions reference the projected
-    # array instead of re-materializing the map. Verified by counting
-    # dictionary-key occurrences in the optimizedPlan string.
-    both = F.transform(
-        F.array("arg1_surface", "arg2_surface"),
-        lambda s: F.try_element_at(dict_map, s),
-    )
-    keep = [
-        c
-        for c in triples_with_surfaces.columns
-        if c not in ("arg1_surface", "arg2_surface")
-    ]
-    staged = triples_with_surfaces.withColumn("_ents", both)
-    return staged.select(
-        *keep,
-        F.col("_ents")[0]["entity_id"].alias("arg1_entity_id"),
-        F.col("_ents")[0]["ner_type"].alias("arg1_ner_type"),
-        F.col("_ents")[1]["entity_id"].alias("arg2_entity_id"),
-        F.col("_ents")[1]["ner_type"].alias("arg2_ner_type"),
-    )
+    return {
+        r.surface_form: (r.entity_id, r.ner_type)
+        for r in _best_alias_per_surface(alias).collect()
+    }
 
 
 def per_org_pairs(linked_triples: DataFrame) -> DataFrame:

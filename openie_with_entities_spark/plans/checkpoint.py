@@ -67,7 +67,6 @@ class CheckpointManager:
         self.spark = spark
         self.base = base_dir
         self.n_buckets = n_buckets
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def _paths(self, stage: str) -> tuple[str, str]:
         return (
@@ -150,7 +149,9 @@ class CheckpointManager:
             out = transform(pending)
             if BUCKET_COL not in out.columns:
                 out = with_bucket(out, self.n_buckets, key)
-            out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_path)
+            out.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(BUCKET_COL).parquet(data_path)
             wall_ms = int((time.monotonic() - t0) * 1000)
 
             counts = (

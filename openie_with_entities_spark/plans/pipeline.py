@@ -89,21 +89,20 @@ def build_kg_fused(
     partitions: int | None = None,
     backend=None,
 ) -> DataFrame:
-    """Production/bench path: ONE mapInArrow pass over raw turns
-    (segment + conj + OIE + dedup + mention summary fused) and map-literal
-    linking — at most one shuffle in the whole job: the conv_id
-    repartition, for an input with fewer splits than cores or an exchange
-    AQE may coalesce. An input with more than cores×3 splits is coalesced
+    """Production/bench path: ONE mapInArrow pass over raw turns (segment
+    + conj + OIE + dedup + entity link fused, through the dictionary that
+    linking.dictionary_surfaces collects once) — no join, and at most one
+    shuffle in the whole job: the conv_id repartition, for an input with
+    fewer splits than cores or an exchange AQE may coalesce. An input with more than cores×3 splits is coalesced
     to cores×3 fused tasks without a shuffle (session.fit_partitions).
     Result is identical to build_kg's linked_triples minus the
     n_mentions-null nuance (fused reports 0 where the modular left join
     reports null for mention-less args).
     """
     from ..extract.fused import fused_extract_stage
-    from ..linking import dictionary_surfaces, link_triples_inline
+    from ..linking import dictionary_surfaces
 
-    triples = fused_extract_stage(
+    return fused_extract_stage(
         transcripts, dictionary_surfaces(alias), partitions=partitions,
         backend=backend,
     )
-    return link_triples_inline(triples, alias)

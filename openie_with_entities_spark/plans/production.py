@@ -5,7 +5,7 @@ launches on a cluster (scripts/run_pipeline.py is the CLI wrapper).
 Stage graph (each stage = one checkpointed parquet table + lineage rows;
 a rerun reprocesses only buckets without lineage):
 
-    transcripts ─► triples (fused extract + inline link)  [ckpt: triples]
+    transcripts ─► triples (fused extract + entity link)  [ckpt: triples]
         ├────────► entity_nodes (linked surfaces and      [ckpt: entity_nodes]
         │          their KB entities)
         ├────────► graph_edges (weighted entity edges)    [ckpt: graph_edges]
@@ -28,11 +28,7 @@ from pyspark.sql import functions as F
 from ..canonicalize import entity_nodes, materialize_graph
 from ..extract.fused import fused_extract_stage
 from ..extract.mentions import detect_mentions
-from ..linking import (
-    dictionary_surfaces,
-    link_triples_inline,
-    violation_counters,
-)
+from ..linking import dictionary_surfaces, violation_counters
 from .checkpoint import CheckpointManager
 from .metrics import FUSED_COUNTERS, StageCounters
 
@@ -57,9 +53,10 @@ def run_production(
     link_mode: str = "inline",
     n_salt: int = 16,
 ) -> ProductionResult:
-    """``link_mode``: 'inline' (broadcast-regime map literal, default) or
-    'salted' (dictionary too big to broadcast: modular mention stage +
-    salted shuffle join — the hot-entity skew path)."""
+    """``link_mode``: 'inline' (default, broadcast regime: the fused stage
+    links each argument through the collected dictionary) or 'salted'
+    (dictionary too big to broadcast: modular mention stage + salted
+    shuffle join — the hot-entity skew path)."""
     mgr = CheckpointManager(spark, out_dir, n_buckets=n_buckets)
     counters = StageCounters(spark, "fused_extract", FUSED_COUNTERS)
 
@@ -73,16 +70,13 @@ def run_production(
                 detect_mentions(res.triples), alias, n_salt=n_salt
             )
             return link_triples(res.triples, linked_m)
-        # the driver-side surface collect happens ONLY on the inline
+        # the driver-side dictionary collect happens ONLY on the inline
         # (broadcast-regime) path — salted mode exists precisely because the
         # dictionary is too big to collect/broadcast — and only when a bucket
         # is pending, so a fully resumed run submits no linking job
-        surfaces = dictionary_surfaces(alias)
-        return link_triples_inline(
-            fused_extract_stage(
-                pending, surfaces, partitions=partitions, counters=counters
-            ),
-            alias,
+        return fused_extract_stage(
+            pending, dictionary_surfaces(alias), partitions=partitions,
+            counters=counters,
         )
 
     run = mgr.run_stage("triples", transcripts, extract)

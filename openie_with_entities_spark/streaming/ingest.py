@@ -35,16 +35,19 @@ def stream_transcripts(
 
 def streaming_triples(
     stream: DataFrame,
-    surfaces: frozenset[str],
+    dictionary: dict[str, tuple[str, str]],
     watermark: str = "10 minutes",
     partitions: int | None = None,
 ) -> DataFrame:
+    """Entity-linked triples of a transcript stream, with the same columns
+    as the batch ``plans.pipeline.build_kg_fused`` output; ``dictionary``
+    comes from ``linking.dictionary_surfaces``."""
     from ..extract.fused import fused_extract_stage
 
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["conv_id", "turn_idx"]
     )
-    return fused_extract_stage(deduped, surfaces, partitions=partitions)
+    return fused_extract_stage(deduped, dictionary, partitions=partitions)
 
 
 DOCUMENT_DDL = "doc_id long, text string, source string, ts timestamp"

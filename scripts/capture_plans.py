@@ -10,8 +10,8 @@ or checked — mechanically:
 
 Sections:
   fused     — build_kg_fused optimized plan + the dictionary-occurrence
-              count (must be EXACTLY 1 after the round-5 single-transform
-              projection in linking.link_triples_inline).
+              count (must be 0: the fused stage links through the
+              dictionary in Python, so the plan never carries it).
   pagerank  — one iteration's executed plan (join + map-combinable agg,
               ids+doubles only).
   khop      — one frontier expansion's executed plan.
@@ -46,15 +46,15 @@ def capture_fused(spark) -> None:
         generate_transcripts(spark, 10), alias_dict(spark), partitions=8
     )
     plan = optimized(linked)
-    # the sentinel surface 'ada lovelace' appears once per planted map copy
+    # the sentinel surface 'ada lovelace' appears once per planted copy
     n_dict = len(re.findall(r"ada lovelace", plan))
     section(
         "fused (optimized plan)",
         plan[:4000] + ("\n… [truncated]" if len(plan) > 4000 else ""),
     )
-    print(f"\ndictionary occurrences in optimized plan: {n_dict} (want 1)")
-    if n_dict != 1:
-        raise SystemExit("FUSED PLAN REGRESSION: map literal planted > once")
+    print(f"\ndictionary occurrences in optimized plan: {n_dict} (want 0)")
+    if n_dict != 0:
+        raise SystemExit("FUSED PLAN REGRESSION: dictionary planted in the plan")
 
 
 def _edges(spark):

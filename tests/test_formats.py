@@ -1,6 +1,7 @@
 """Interchange format readers/writers + conjunction evaluator + streaming."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -143,6 +144,7 @@ def test_coordinations_df(spark):
 def test_streaming_ingest(spark, tmpdir):
     from openie_with_entities_spark.corpus import alias_dict, generate_transcripts
     from openie_with_entities_spark.linking import dictionary_surfaces
+    from openie_with_entities_spark.plans.pipeline import build_kg_fused
     from openie_with_entities_spark.streaming.ingest import (
         run_stream_to_table,
         stream_transcripts,
@@ -161,6 +163,13 @@ def test_streaming_ingest(spark, tmpdir):
     got = spark.read.parquet(os.path.join(out, "data"))
     got_count = got.count()
     assert got_count > 0
+    # the stream emits the batch triples table: same columns, same rows
+    batch = build_kg_fused(spark.read.parquet(inp), alias_dict(spark))
+    streamed = got.drop("epoch")
+    assert streamed.columns == batch.columns
+    assert Counter(map(tuple, streamed.collect())) == Counter(
+        map(tuple, batch.collect())
+    )
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
     assert lineage.agg(F.sum("rows_out")).collect()[0][0] == got.count()
 

@@ -1,5 +1,7 @@
 """Linking, canonicalization, and checkpoint/resume tests."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -174,6 +176,46 @@ def test_checkpoint_partial_resume(spark, tmp_path_factory):
         assert r.output.count() == expected
     finally:
         t.unpersist()
+
+
+def test_partial_resume_keeps_completed_buckets_in_static_session(
+    spark, tmp_path_factory
+):
+    """Lineage covers buckets 0-3 only while data exists for all 8: the
+    resume rewrites buckets 4-7 and must keep the rows of 0-3 (a static
+    overwrite would wipe them), without switching the caller's session to
+    dynamic partition overwrite."""
+    from collections import Counter
+
+    from openie_with_entities_spark.plans.checkpoint import LINEAGE_SCHEMA
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    base = str(tmp_path_factory.mktemp("ckpt_static"))
+    t = generate_transcripts(spark, 20).cache()
+    try:
+        mgr = CheckpointManager(spark, base, n_buckets=8)
+
+        def transform(df):
+            return df.select("conv_id", "turn_idx", F.length("text").alias("n"))
+
+        mgr.run_stage("lens", t, transform)
+        kept = [r for r in mgr.lineage("lens").collect() if r.bucket < 4]
+        assert sum(r.rows_out for r in kept) > 0
+        spark.createDataFrame(kept, LINEAGE_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(base, "lens", "lineage"))
+
+        r = mgr.run_stage("lens", t, transform)
+        assert (r.buckets_processed, r.buckets_skipped) == (4, 4)
+        assert Counter(map(tuple, r.output.collect())) == Counter(
+            map(tuple, transform(t).collect())
+        )
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        t.unpersist()
+        spark.conf.set(key, before)
 
 
 def test_connected_components_at_scale(spark, steal_ratio):

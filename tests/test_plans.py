@@ -16,15 +16,24 @@ def plan_of(df) -> str:
 
 def test_fused_pipeline_single_shuffle(spark):
     t = generate_transcripts(spark, 10)
-    linked = build_kg_fused(t, alias_dict(spark), partitions=8)
+    alias = alias_dict(spark)
+    linked = build_kg_fused(t, alias, partitions=8)
     plan = plan_of(linked)
     # corpus generator contributes its own repartition; beyond that the
     # pipeline may add ONLY the explicit conv_id repartition — no
     # ENSURE_REQUIREMENTS exchanges (those would mean hidden shuffles)
     assert "ENSURE_REQUIREMENTS" not in plan, plan
     assert len(re.findall(r"REPARTITION_BY_NUM", plan)) <= 2
-    # linking is a pure projection: no joins at all in the fused path
+    # linking runs inside the fused stage: no joins at all in the fused
+    # path, and the dictionary is never planted in the plan
     assert "Join" not in plan
+    optimized = linked._jdf.queryExecution().optimizedPlan().toString()
+    planted = [
+        r.surface_form
+        for r in alias.select("surface_form").collect()
+        if " " in r.surface_form and r.surface_form in optimized
+    ]
+    assert planted == [], optimized
 
 
 def test_parquet_column_pruning_and_pushdown(spark):
@@ -332,7 +341,7 @@ def test_input_split_probe_submits_no_job(spark):
     shuffled = t.dropDuplicates(["conv_id", "turn_idx"])
 
     out, n_jobs = _jobs_submitted(
-        spark, lambda: fused_extract_stage(shuffled, frozenset())
+        spark, lambda: fused_extract_stage(shuffled, {})
     )
     assert n_jobs == 0
     plan = plan_of(out)
@@ -347,7 +356,7 @@ def test_input_split_probe_submits_no_job(spark):
     cached.count()
     try:
         out, n_jobs = _jobs_submitted(
-            spark, lambda: fused_extract_stage(cached, frozenset())
+            spark, lambda: fused_extract_stage(cached, {})
         )
         assert n_jobs == 0
         assert out.rdd.getNumPartitions() == min(32, cores * 3)
@@ -367,7 +376,7 @@ def test_input_split_probe_reads_user_repartition_count(spark):
 
     cores = spark.sparkContext.defaultParallelism
     out, n_jobs = _jobs_submitted(
-        spark, lambda: fused_extract_stage(generate_transcripts(spark, 20), frozenset())
+        spark, lambda: fused_extract_stage(generate_transcripts(spark, 20), {})
     )
     assert n_jobs == 0
     plan = plan_of(out)
@@ -381,7 +390,7 @@ def test_input_split_probe_reads_user_repartition_count(spark):
         ["conv_id", "turn_idx"]
     )
     out, n_jobs = _jobs_submitted(
-        spark, lambda: fused_extract_stage(shuffled, frozenset())
+        spark, lambda: fused_extract_stage(shuffled, {})
     )
     assert n_jobs == 0
     plan = plan_of(out)
