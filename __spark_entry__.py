@@ -53,7 +53,7 @@ def entry(spark: SparkSession) -> DataFrame:
     transcripts = _docs_as_transcripts(docs).unionByName(
         generate_transcripts(spark, 100)
     )
-    res = extract_triples(transcripts, partitions=8)
+    res = extract_triples(transcripts)
     mentions = detect_mentions(res.triples)
     linked = link_triples(res.triples, link_mentions(mentions, alias_dict(spark)))
     return linked.select(
@@ -516,7 +516,7 @@ def _kg_triples(spark, sf_dir):
     transcripts = _docs_as_transcripts(docs).unionByName(
         generate_transcripts(spark, 200)
     )
-    return extract_triples(transcripts, partitions=8).triples
+    return extract_triples(transcripts).triples
 
 
 def _media_features(spark, sf_dir):

@@ -2,27 +2,40 @@
 construction engine with the query/data-processing capabilities of
 prajnaupadhyay/openie-with-entities (EACL 2023).
 
-Architecture (idiomatic Spark, NOT a port):
+Architecture (idiomatic Spark, NOT a port).
+
+Production (plans.production.run_production, plans.pipeline.build_kg_fused,
+the stream in streaming.ingest):
 
     transcripts(conv_id, turn_idx, role, text, tool, ts)      [parquet]
-        │  segment (native columns: normalize quotes, posexplode sentences)
+        │  layout: session.fit_partitions to cores×3 tasks (a conv_id
+        │  hash repartition only when the input cannot feed every core)
         ▼
-    sentences(conv_id, turn_idx, sent_idx, text)
-        │  conj stage (mapInPandas: label → coordination decode → split)
+    fused stage (extract.fused, ONE mapInArrow pass per turn batch:
+        segment → conj label → coordination decode → split → OIE label →
+        triple decode → per-sentence dedup → entity link through the
+        dictionary that linking.dictionary_surfaces collects once)
         ▼
-    split_sentences(conv_id, turn_idx, sent_idx, split_idx, text, conj_words)
-        │  oie stage (mapInPandas: batched labeling → triple decode)
-        ▼
-    raw_triples → dropDuplicates → window top-k → triples
-        │  mention stage (mapInPandas NER) → broadcast/salted alias join
-        ▼
-    linked mentions → connected-components canonicalization → entity_nodes
-        ▼
-    triples(…, arg1_entity_id, arg2_entity_id) + lineage/metrics tables
+    triples(…, arg1_entity_id, arg1_ner_type, arg2_entity_id, …)
+        │  [checkpointed per bucket, with lineage]
+        ├─► entity_nodes: canonicalize.entity_nodes, one mapInPandas NER
+        │   pass over the distinct argument texts joined to the broadcast
+        │   alias table (a star forest: the canonical id is the entity id)
+        ├─► graph_edges
+        └─► metrics (violation counters, stage counters)
 
-Everything outside the four mapInPandas stage bodies is native Spark SQL
-(Catalyst-optimizable); all keys travel as columns (no driver-side dicts,
-unlike the reference's `mapping` machinery at /root/reference/run.py:163-204).
+Modular path (plans.pipeline.extract_triples / build_kg: the reference the
+tests and driver contracts check the fused stage against, and the salted
+link mode for a dictionary too big to collect):
+
+    transcripts → segment (native columns) → conj stage (mapInPandas)
+        → oie stage (mapInPandas) → keep-first window dedup → triples
+        → mention stage (extract.mentions, mapInArrow NER)
+        → broadcast or salted alias join → linked triples
+
+The labeling and decode work per text exists once, as the extract.stages
+kernels both paths call; everything around the Python stage bodies is
+native Spark SQL.
 """
 
 __version__ = "0.1.0"

@@ -570,7 +570,7 @@ def _m3_sentences(spark):
 def q_m3_conj_split(spark, sf_dir):
     from openie_with_entities_spark.extract.stages import conj_split_stage
 
-    out = conj_split_stage(_m3_sentences(spark), partitions=4)
+    out = conj_split_stage(_m3_sentences(spark))
     return out.select(
         "conv_id", "turn_idx", "sent_idx", "split_idx", "n_splits",
         "split_text",
@@ -596,7 +596,7 @@ def q_a11_split_conservation(spark, sf_dir):
     sentence, the split table's row count equals its declared n_splits."""
     from openie_with_entities_spark.extract.stages import conj_split_stage
 
-    out = conj_split_stage(_m3_sentences(spark), partitions=4)
+    out = conj_split_stage(_m3_sentences(spark))
     per = out.groupBy("conv_id", "turn_idx", "sent_idx").agg(
         F.count("*").alias("n_rows"), F.first("n_splits").alias("declared")
     )
@@ -637,7 +637,7 @@ def q_m4_oie_stage(spark, sf_dir):
         "conv_id string, turn_idx int, sent_idx int, split_idx int, "
         "split_text string",
     )
-    return oie_stage(splits, partitions=4)
+    return oie_stage(splits)
 
 
 def o_m4() -> str:
@@ -1665,7 +1665,7 @@ def q_s8_labels_sink(spark, sf_dir):
     from openie_with_entities_spark.sources.formats import to_labels_blocks
 
     sents = _m3_sentences(spark)
-    splits = conj_split_stage(sents, partitions=4, with_indices=True)
+    splits = conj_split_stage(sents, with_indices=True)
     return to_labels_blocks(oie_labels_stage(splits), sents)
 
 

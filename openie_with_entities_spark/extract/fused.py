@@ -86,7 +86,6 @@ def _link_summary(
 def fused_extract_stage(
     transcripts: DataFrame,
     dictionary: dict[str, tuple[str, str]],
-    partitions: int | None = None,
     counters=None,
     backend=None,
 ) -> DataFrame:
@@ -192,6 +191,6 @@ def fused_extract_stage(
     turns = transcripts.where(
         F.col("text").isNotNull() & (F.col("text") != "")
     ).select("conv_id", "turn_idx", "text")
-    return _partition_for_inference(turns, "text", partitions).mapInArrow(
+    return _partition_for_inference(turns, "text").mapInArrow(
         run, schema=FUSED_SCHEMA
     )

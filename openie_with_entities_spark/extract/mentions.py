@@ -3,7 +3,7 @@
 The reference runs flair NER over extraction subjects/objects in batches of
 256 (/root/reference/scripts/pubmed_analysis.py:57-58, scripts/violations.py:42-45)
 and over sentences for training features (/root/reference/data.py:34-74). The
-engine expresses this as one mapInPandas stage over the triples table: a
+engine expresses this as one mapInArrow stage over the triples table: a
 deterministic capitalized-run detector stands in for flair (same contract —
 batched text in, typed spans out); a neural backend replaces only the inner
 ``_spans`` function with a per-worker-singleton tagger call.
@@ -19,18 +19,24 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 _WORD_STOP = frozenset(
     [".", ",", "!", "?", ";", ":", "''", "'", "``", "(", ")"]
 )
 
-MENTION_SCHEMA = (
-    "conv_id string, turn_idx int, sent_idx int, split_idx int, ext_idx int, "
-    "arg_pos int, mention string, surface_norm string, begin_word int, "
-    "end_word int"
-)
+# the flat schema of every batch ``detect_mentions`` yields; MENTION_SCHEMA
+# is its Spark twin
+MENTION_ARROW_SCHEMA = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("sent_idx", pa.int32()),
+    ("split_idx", pa.int32()), ("ext_idx", pa.int32()), ("arg_pos", pa.int32()),
+    ("mention", pa.string()), ("surface_norm", pa.string()),
+    ("begin_word", pa.int32()), ("end_word", pa.int32()),
+])
+MENTION_SCHEMA = from_arrow_schema(MENTION_ARROW_SCHEMA)
+_KEYS = ("conv_id", "turn_idx", "sent_idx", "split_idx", "ext_idx")
 
 _NORM_RE = re.compile(r"[^\w\s]")
 
@@ -65,21 +71,18 @@ def detect_mentions(triples: DataFrame, span_fn=None) -> DataFrame:
     passes a callable that tags the batch's texts and maps entity char
     offsets back to word spans — tests/test_real_models.py exercises both
     when the libraries are present. The callable is pickled into the
-    mapInPandas closure, so heavyweight models should lazy-init a
+    mapInArrow closure, so heavyweight models should lazy-init a
     per-worker singleton inside it (extract.neural.load_backend pattern)
     rather than capture the model object."""
     span_fn = span_fn or _spans
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "conv_id": [], "turn_idx": [], "sent_idx": [],
-                "split_idx": [], "ext_idx": [], "arg_pos": [],
-                "mention": [], "surface_norm": [], "begin_word": [],
-                "end_word": [],
-            }
-            for row in pdf.itertuples():
-                for arg_pos, text in ((1, row.arg1), (2, row.arg2)):
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out: dict[str, list] = {k: [] for k in MENTION_ARROW_SCHEMA.names}
+            for *key, arg1, arg2 in zip(
+                *(batch.column(c).to_pylist() for c in (*_KEYS, "arg1", "arg2"))
+            ):
+                for arg_pos, text in ((1, arg1), (2, arg2)):
                     tokens = text.split()
                     taken_until = -1
                     for (s, e) in span_fn(tokens):
@@ -87,20 +90,15 @@ def detect_mentions(triples: DataFrame, span_fn=None) -> DataFrame:
                             continue
                         taken_until = e
                         mention = " ".join(tokens[s : e + 1])
-                        out["conv_id"].append(row.conv_id)
-                        out["turn_idx"].append(row.turn_idx)
-                        out["sent_idx"].append(row.sent_idx)
-                        out["split_idx"].append(row.split_idx)
-                        out["ext_idx"].append(row.ext_idx)
+                        for k, v in zip(_KEYS, key):
+                            out[k].append(v)
                         out["arg_pos"].append(arg_pos)
                         out["mention"].append(mention)
                         out["surface_norm"].append(normalize_surface(mention))
                         out["begin_word"].append(s)
                         out["end_word"].append(e)
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pydict(out, schema=MENTION_ARROW_SCHEMA)
 
-    cols = [
-        "conv_id", "turn_idx", "sent_idx", "split_idx", "ext_idx",
-        "arg1", "arg2",
-    ]
-    return triples.select(*cols).mapInPandas(run, schema=MENTION_SCHEMA)
+    return triples.select(*_KEYS, "arg1", "arg2").mapInArrow(
+        run, schema=MENTION_SCHEMA
+    )

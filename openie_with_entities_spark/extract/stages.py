@@ -10,9 +10,11 @@ Stage contract (the reference's batch loop, re-expressed for Spark):
 
 The per-text work of each step exists once, as a batch kernel
 (``conj_kernel``, ``oie_kernel``) that the modular stages here and the
-fused body call alike. Both stages:
-  * are repartitioned by hash(conv_id) first — the explicit shuffle the
-    north rule requires, and the ONLY shuffle before the final aggregate;
+fused body call alike. The stages:
+  * take the conj stage's input layout from ``session.fit_partitions`` (a
+    conv_id hash repartition only when the input cannot feed every core,
+    and then the ONLY shuffle before the final aggregate); the OIE stages
+    map over the conj stage's output as it arrives;
   * sort within partitions by token count (the reference's bucket-by-length
     batching, /root/reference/data.py:469-472) so a batched neural backend
     pads minimally;
@@ -129,41 +131,35 @@ def oie_kernel(backend, texts: list[str]) -> list[list[tuple]]:
     ]
 
 
-def _partition_for_inference(df: DataFrame, text_col: str, partitions: int | None) -> DataFrame:
+def _partition_for_inference(df: DataFrame, text_col: str) -> DataFrame:
     """The stage's input layout, then a per-partition length sort.
 
-    The count is explicit, never AQE's: AQE's coalescing optimizes for
+    The count is the engine's, never AQE's: AQE's coalescing optimizes for
     shuffle-block size and would shrink a text-sized corpus to a handful of
     partitions — correct for IO-bound SQL, disastrous for a CPU-bound model
     stage (7 of 32 cores busy, measured). Inference stages are compute-bound,
     so parallelism follows cores (×3 for stragglers), not bytes:
+    ``session.fit_partitions`` to cores×3 hash repartitions by conv_id only
+    for a stream, an exchange AQE may coalesce, or an input with fewer
+    splits than cores (then to at most 4× its splits, each a Python task
+    launch: ~15 ms of worker CPU once the worker has imported this package,
+    ~160 ms while every task start re-read Spark's zip archives); an input
+    with cores to cores×3 splits is mapped over as it is, and a larger one
+    is coalesced to cores×3 tasks, with no shuffle either way. Extraction is
+    per-row, so placement never changes results.
 
-      * explicit ``partitions`` → that many conv_id hash partitions;
-      * otherwise ``session.fit_partitions`` to cores×3: a conv_id hash
-        repartition only for a stream, an exchange AQE may coalesce, or an
-        input with fewer splits than cores (then to at most 4× its splits,
-        each a Python task launch: ~15 ms of worker CPU once the worker has
-        imported this package, ~160 ms while every task start re-read
-        Spark's zip archives);
-        an input with cores to cores×3 splits is mapped over as it is, and
-        a larger one is coalesced to cores×3 tasks, with no shuffle either
-        way. Extraction is per-row, so placement never changes results.
+    A caller who wants a particular task count lays the input out that way
+    (``repartition(n, "conv_id")``): n from cores to cores×3 runs as n tasks.
     """
-    if partitions is None:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        out = fit_partitions(df, cores * 3, "conv_id", per_split=4)
-    else:
-        out = df.repartition(partitions, F.col("conv_id"))
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    out = fit_partitions(df, cores * 3, "conv_id", per_split=4)
     if out.isStreaming:  # sort unsupported on streams; batches are small
         return out
     return out.sortWithinPartitions(F.size(F.split(F.col(text_col), " ")))
 
 
 def conj_split_stage(
-    sentences: DataFrame,
-    partitions: int | None = None,
-    backend=None,
-    with_indices: bool = False,
+    sentences: DataFrame, backend=None, with_indices: bool = False
 ) -> DataFrame:
     """sentences → one row per split sentence.
 
@@ -215,14 +211,12 @@ def conj_split_stage(
     eligible = sentences.where(F.col("eligible")).select(
         "conv_id", "turn_idx", "sent_idx", "text"
     )
-    return _partition_for_inference(eligible, "text", partitions).mapInPandas(
+    return _partition_for_inference(eligible, "text").mapInPandas(
         run, schema=schema
     )
 
 
-def oie_stage(
-    splits: DataFrame, partitions: int | None = None, backend=None
-) -> DataFrame:
+def oie_stage(splits: DataFrame, backend=None) -> DataFrame:
     """split sentences → raw extractions (pre global dedup/ranking).
 
     Insert-time dedup WITHIN one split sentence (first depth wins) happens
@@ -258,14 +252,10 @@ def oie_stage(
                     out["confidence"].append(conf)
             yield pd.DataFrame(out)
 
-    narrow = splits.select(
+    # mapped over as it arrives: the conj stage already laid it out
+    return splits.select(
         "conv_id", "turn_idx", "sent_idx", "split_idx", "split_text"
-    )
-    # Already partitioned by conv_id from the conj stage — no new shuffle
-    # unless the caller asks for a different width.
-    if partitions:
-        narrow = _partition_for_inference(narrow, "split_text", partitions)
-    return narrow.mapInPandas(run, schema=TRIPLE_SCHEMA)
+    ).mapInPandas(run, schema=TRIPLE_SCHEMA)
 
 
 OIE_LABELS_SCHEMA = (
@@ -274,9 +264,7 @@ OIE_LABELS_SCHEMA = (
 )
 
 
-def oie_labels_stage(
-    splits: DataFrame, partitions: int | None = None, backend=None
-) -> DataFrame:
+def oie_labels_stage(splits: DataFrame, backend=None) -> DataFrame:
     """split sentences (with indices — conj_split_stage(with_indices=True))
     → per-extraction TRAINING-LABEL rows over the ORIGINAL sentence's token
     positions: the S8 labels-sink projection of
@@ -328,10 +316,7 @@ def oie_labels_stage(
             if out["conv_id"]:  # empty object cols can't cast to array<int>
                 yield pd.DataFrame(out)
 
-    narrow = splits.select(
+    return splits.select(
         "conv_id", "turn_idx", "sent_idx", "split_idx", "split_text",
         "split_indices", "n_orig_tokens",
-    )
-    if partitions:
-        narrow = _partition_for_inference(narrow, "split_text", partitions)
-    return narrow.mapInPandas(run, schema=OIE_LABELS_SCHEMA)
+    ).mapInPandas(run, schema=OIE_LABELS_SCHEMA)

@@ -49,9 +49,7 @@ def run_production(
     alias: DataFrame,
     out_dir: str,
     n_buckets: int = 16,
-    partitions: int | None = None,
     link_mode: str = "inline",
-    n_salt: int = 16,
 ) -> ProductionResult:
     """``link_mode``: 'inline' (default, broadcast regime: the fused stage
     links each argument through the collected dictionary) or 'salted'
@@ -65,18 +63,15 @@ def run_production(
             from ..linking import link_mentions_salted, link_triples
             from ..plans.pipeline import extract_triples
 
-            res = extract_triples(pending, partitions=partitions)
-            linked_m = link_mentions_salted(
-                detect_mentions(res.triples), alias, n_salt=n_salt
-            )
+            res = extract_triples(pending)
+            linked_m = link_mentions_salted(detect_mentions(res.triples), alias)
             return link_triples(res.triples, linked_m)
         # the driver-side dictionary collect happens ONLY on the inline
         # (broadcast-regime) path — salted mode exists precisely because the
         # dictionary is too big to collect/broadcast — and only when a bucket
         # is pending, so a fully resumed run submits no linking job
         return fused_extract_stage(
-            pending, dictionary_surfaces(alias), partitions=partitions,
-            counters=counters,
+            pending, dictionary_surfaces(alias), counters=counters
         )
 
     run = mgr.run_stage("triples", transcripts, extract)

@@ -83,23 +83,27 @@ def get_spark(
 
 def input_splits(df: DataFrame) -> int | None:
     """The split count ``df`` hands the next stage, read without a job;
-    None for a stream or a plan whose count is not fixed before it runs.
+    None for a stream or a plan whose count is not fixed before it runs."""
+    if df.isStreaming:
+        return None
+    return _plan_splits(df._jdf.queryExecution().executedPlan())
+
+
+def _plan_splits(plan) -> int | None:
+    """``input_splits`` of a physical plan.
 
     A user ``repartition(n)`` (a ShuffleExchangeExec of origin
     REPARTITION_BY_NUM, which AQE never coalesces) fixes the count: with
     only such exchanges in the AQE initial plan, the root's
     ``outputPartitioning`` carries it. Any other exchange returns None, as
-    does an unknown root partitioning: with AQE on, ``.rdd`` on such a plan
+    does an unknown root partitioning: with AQE on, executing such a plan
     would run the upstream shuffle as a job and read its post-coalesce count
-    (often one split). On an exchange-free plan ``.rdd`` runs no job, except
-    to fill a cache that is not yet materialized, which the stage would fill
-    anyway."""
-    if df.isStreaming:
-        return None
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.initialPlan()
-    nodes, exchanged = [plan], False
+    (often one split). A cache that is not yet filled is read through its
+    own plan, by the same rules, when a chain of one-child nodes leads to
+    it: executing it would fill it, as jobs, before the caller's action.
+    An exchange-free plan is executed for its RDD, which runs no job."""
+    top = plan.initialPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+    nodes, exchanged, forks, unfilled = [top], False, False, []
     while nodes:
         node = nodes.pop()
         if node.nodeName().endswith("Exchange"):
@@ -109,11 +113,20 @@ def input_splits(df: DataFrame) -> int | None:
             ):
                 return None
             exchanged = True
+        elif (
+            node.getClass().getSimpleName() == "InMemoryTableScanExec"
+            and not node.relation().cacheBuilder().isCachedColumnBuffersLoaded()
+        ):
+            unfilled.append(node.relation().cachedPlan())
         children = node.children()
+        forks |= children.size() > 1
         nodes.extend(children.apply(i) for i in range(children.size()))
-    if exchanged:
-        return plan.outputPartitioning().numPartitions() or None
-    return df.rdd.getNumPartitions()
+    if exchanged or unfilled:
+        known = top.outputPartitioning().numPartitions()
+        if known or exchanged or forks:
+            return known or None
+        return _plan_splits(unfilled[0])
+    return plan.execute().getNumPartitions()
 
 
 def fit_partitions(df: DataFrame, target: int, key: str, per_split: int) -> DataFrame:

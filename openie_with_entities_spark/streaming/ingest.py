@@ -37,7 +37,6 @@ def streaming_triples(
     stream: DataFrame,
     dictionary: dict[str, tuple[str, str]],
     watermark: str = "10 minutes",
-    partitions: int | None = None,
 ) -> DataFrame:
     """Entity-linked triples of a transcript stream, with the same columns
     as the batch ``plans.pipeline.build_kg_fused`` output; ``dictionary``
@@ -47,7 +46,7 @@ def streaming_triples(
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["conv_id", "turn_idx"]
     )
-    return fused_extract_stage(deduped, dictionary, partitions=partitions)
+    return fused_extract_stage(deduped, dictionary)
 
 
 DOCUMENT_DDL = "doc_id long, text string, source string, ts timestamp"

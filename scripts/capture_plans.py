@@ -42,9 +42,7 @@ def capture_fused(spark) -> None:
     from openie_with_entities_spark.corpus import alias_dict, generate_transcripts
     from openie_with_entities_spark.plans.pipeline import build_kg_fused
 
-    linked = build_kg_fused(
-        generate_transcripts(spark, 10), alias_dict(spark), partitions=8
-    )
+    linked = build_kg_fused(generate_transcripts(spark, 10), alias_dict(spark))
     plan = optimized(linked)
     # the sentinel surface 'ada lovelace' appears once per planted copy
     n_dict = len(re.findall(r"ada lovelace", plan))

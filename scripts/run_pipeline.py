@@ -31,7 +31,6 @@ def main() -> int:
     ap.add_argument("--alias", help="alias dictionary parquet path")
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--convs", type=int, default=2000, help="synthetic corpus size when --input is omitted")
     ap.add_argument("--cores", type=int, default=None, help="local-mode cores (ignored under spark-submit on a cluster)")
     args = ap.parse_args()
@@ -82,7 +81,6 @@ def main() -> int:
         alias,
         args.output,
         n_buckets=args.buckets,
-        partitions=args.partitions,
     )
     n = result.triples.count()
     print(

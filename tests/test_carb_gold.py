@@ -73,7 +73,7 @@ def test_engine_extractor_on_carb_sentences(spark, gold):
         F.lit(None).cast("string").alias("tool"),
         F.lit("2025-01-01 00:00:00").cast("timestamp").alias("ts"),
     )
-    res = extract_triples(transcripts, partitions=8)
+    res = extract_triples(transcripts)
     # map back to sentence text keys: conv_id = md5(sentence)
     pred = res.triples.join(
         sents.select(

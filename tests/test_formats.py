@@ -332,7 +332,7 @@ def test_labels_sink_equals_sequential_get_labels(spark):
     from openie_with_entities_spark.sources.formats import to_labels_blocks
 
     sents = _m3_sentences(spark)
-    splits = conj_split_stage(sents, partitions=4, with_indices=True)
+    splits = conj_split_stage(sents, with_indices=True)
     got = {
         (r.conv_id, r.turn_idx, r.sent_idx): r.block
         for r in to_labels_blocks(oie_labels_stage(splits), sents).collect()

@@ -19,8 +19,8 @@ def both(spark):
     t = generate_transcripts(spark, 50).cache()
     t.count()
     alias = alias_dict(spark)
-    modular = build_kg(t, alias, partitions=8).linked_triples
-    fused = build_kg_fused(t, alias, partitions=8)
+    modular = build_kg(t, alias).linked_triples
+    fused = build_kg_fused(t, alias)
     return modular, fused
 
 
@@ -121,15 +121,14 @@ def test_fused_memo_replays_instances_across_batches(spark):
     ]
     n_turns = 5000  # > one 4096-row Arrow batch → cross-batch memo reuse
     ts = dt.datetime(2025, 1, 1)
-    rows = [
-        ("c%05d" % (i // 4), i % 4, "user", texts[i % 4], None, ts)
-        for i in range(n_turns)
-    ]
+    rows = [("k", i, "user", texts[i % 4], None, ts) for i in range(n_turns)]
+    # one split is hash repartitioned by conv_id (session.fit_partitions),
+    # and the one conv_id puts every row in one task
     t = spark.createDataFrame(
         rows,
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
-    )
+    ).coalesce(1)
 
     class CountingBackend(DeterministicBackend):
         def __init__(self, sc):
@@ -150,7 +149,7 @@ def test_fused_memo_replays_instances_across_batches(spark):
     backend = CountingBackend(spark.sparkContext)
     counters = StageCounters(spark, "fused_memo_test", FUSED_COUNTERS)
     out = fused_extract_stage(
-        t, dictionary_surfaces(alias_dict(spark)), partitions=1,
+        t, dictionary_surfaces(alias_dict(spark)),
         counters=counters, backend=backend,
     ).collect()
 
@@ -168,9 +167,9 @@ def test_fused_memo_replays_instances_across_batches(spark):
         got.setdefault((r.conv_id, r.turn_idx), []).append(
             (r.arg1, r.rel, r.arg2, r.confidence)
         )
-    assert len(got) == sum(1 for _, ti, *_ in rows if per_turn.get(ti))
+    assert len(got) == sum(1 for _, ti, *_ in rows if per_turn.get(ti % 4))
     for (conv_id, ti), triples in got.items():
-        assert sorted(triples) == sorted(per_turn[ti]), (conv_id, ti)
+        assert sorted(triples) == sorted(per_turn[ti % 4]), (conv_id, ti)
     # counters count instances: 5000 sentences in, one split row per
     # non-coordination sentence + 3 per coordination sentence
     tot = counters.snapshot()
@@ -178,8 +177,8 @@ def test_fused_memo_replays_instances_across_batches(spark):
     assert tot["sentences_in"] == n_turns
     n_coord = len([i for i in range(n_turns) if i % 4 == 2])
     assert tot["splits_out"] == (n_turns - n_coord) + 3 * n_coord
-    # one task (partitions=1): each distinct text labeled once over both
-    # Arrow batches, at most one conj and one OIE call per batch
+    # one task: each distinct text labeled once over both Arrow batches,
+    # at most one conj and one OIE call per batch
     batch_rows = int(
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     )

@@ -23,7 +23,7 @@ from openie_with_entities_spark.plans.pipeline import extract_triples
 @pytest.fixture(scope="module")
 def triples(spark):
     t = generate_transcripts(spark, 40)
-    res = extract_triples(t, partitions=8)
+    res = extract_triples(t)
     return res.triples.cache()
 
 

@@ -193,14 +193,14 @@ def test_neural_backend_drives_spark_stages(spark):
         tokenize_word=fake_tokenizer,
     )
     t = generate_transcripts(spark, 12).cache()
-    det = extract_triples(t, partitions=4).triples
-    neu = extract_triples(t, partitions=4, backend=backend).triples
+    det = extract_triples(t).triples
+    neu = extract_triples(t, backend=backend).triples
     cols = ["conv_id", "turn_idx", "sent_idx", "arg1", "rel", "arg2"]
     assert det.select(cols).exceptAll(neu.select(cols)).count() == 0
     assert neu.select(cols).exceptAll(det.select(cols)).count() == 0
 
     surfaces = dictionary_surfaces(alias_dict(spark))
-    det_f = fused_extract_stage(t, surfaces, partitions=4)
-    neu_f = fused_extract_stage(t, surfaces, partitions=4, backend=backend)
+    det_f = fused_extract_stage(t, surfaces)
+    neu_f = fused_extract_stage(t, surfaces, backend=backend)
     assert det_f.select(cols).exceptAll(neu_f.select(cols)).count() == 0
     assert neu_f.select(cols).exceptAll(det_f.select(cols)).count() == 0

@@ -31,7 +31,7 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def result(corpus):
-    res = extract_triples(corpus, partitions=8)
+    res = extract_triples(corpus)
     res.triples.cache().count()
     return res
 
@@ -86,7 +86,7 @@ def test_engine_matches_oracle_other_seeds(spark, seed):
         .orderBy("conv_id", "turn_idx")
         .collect()
     ]
-    res = extract_triples(t, partitions=8)
+    res = extract_triples(t)
     _assert_engine_equals_oracle(res.triples, reference_triples(turns))
 
 
@@ -189,7 +189,7 @@ def test_doubled_space_token_boundary(spark):
     assert seg[0].eligible  # Java-split empty tokens must not count
 
     oracle = reference_triples([("c0", 0, text)])
-    engine = extract_triples(df, partitions=2).triples.collect()
+    engine = extract_triples(df).triples.collect()
     # both paths agree the sentence is eligible (may yield zero triples —
     # 'w' is no verb — but the sentence must flow through identically)
     assert len(engine) == len(oracle)

@@ -17,7 +17,7 @@ def plan_of(df) -> str:
 def test_fused_pipeline_single_shuffle(spark):
     t = generate_transcripts(spark, 10)
     alias = alias_dict(spark)
-    linked = build_kg_fused(t, alias, partitions=8)
+    linked = build_kg_fused(t, alias)
     plan = plan_of(linked)
     # corpus generator contributes its own repartition; beyond that the
     # pipeline may add ONLY the explicit conv_id repartition — no
@@ -397,6 +397,52 @@ def test_input_split_probe_reads_user_repartition_count(spark):
     assert re.search(rf"hashpartitioning\(conv_id#\d+, {cores * 3}\)", plan), plan
 
 
+def _documents(spark, path):
+    """A one-file documents parquet, read back: a one-split scan."""
+    spark.createDataFrame(
+        [(i, f"Ada Lovelace founded Acme {i} .", "wiki") for i in range(64)],
+        "doc_id long, text string, source string",
+    ).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_input_split_probe_runs_no_job_on_unfilled_cache(spark, tmp_path):
+    """A cache that is not yet filled is sized from its own plan: its user
+    repartition(32), or its scan's one split. Executing the plan would
+    fill the cache, as jobs, before the caller's action (it ran 3 jobs for
+    the repartitioned input)."""
+    from openie_with_entities_spark.session import input_splits
+
+    for df, splits in (
+        (generate_transcripts(spark, 40).repartition(32).cache(), 32),
+        (_documents(spark, str(tmp_path / "docs")).cache(), 1),
+    ):
+        try:
+            got, n_jobs = _jobs_submitted(
+                spark, lambda: input_splits(df.where(F.col("text") != ""))
+            )
+            assert (got, n_jobs) == (splits, 0)
+        finally:
+            df.unpersist()
+
+
+def test_flagship_input_gets_full_conj_layout(spark, tmp_path):
+    """The flagship's input, a parquet scan unioned with a generated corpus,
+    has no split count fixed in its plan (a union over a user repartition),
+    so the conj stage's input is hash repartitioned by conv_id to cores×3."""
+    import __spark_entry__ as entrymod
+    from openie_with_entities_spark.plans.pipeline import extract_triples
+
+    cores = spark.sparkContext.defaultParallelism
+    transcripts = entrymod._docs_as_transcripts(
+        _documents(spark, str(tmp_path / "docs"))
+    ).unionByName(generate_transcripts(spark, 100))
+    plan = plan_of(extract_triples(transcripts).splits)
+    exchange = re.search(rf"hashpartitioning\(conv_id#\d+, {cores * 3}\)", plan)
+    assert exchange, plan
+    assert plan.index("MapInPandas") < exchange.start(), plan
+
+
 def test_spread_fans_small_scan_out_to_full_target(spark, tmp_path):
     """docops._spread's projections run in the JVM, where a task costs
     little to launch, so a one-split scan is hash repartitioned to the full
@@ -417,8 +463,8 @@ def test_spread_fans_small_scan_out_to_full_target(spark, tmp_path):
 
 def test_over_split_input_coalesces_to_fused_target(spark):
     """An input with 3× the fused target's splits runs in exactly cores×3
-    fused tasks, with no shuffle, and yields the rows an explicit conv_id
-    repartition yields."""
+    fused tasks, with no shuffle, and yields the rows the same input yields
+    in one split (hash repartitioned by conv_id)."""
     cores = spark.sparkContext.defaultParallelism
     alias = alias_dict(spark)
     cached = generate_transcripts(spark, 40, partitions=9 * cores).cache()
@@ -435,6 +481,6 @@ def test_over_split_input_coalesces_to_fused_target(spark):
             for j in jobs for s in tracker.getJobInfo(j).stageIds
         ]
         assert [n for n in tasks if n] == [cores * 3], tasks
-        assert rows == sorted(build_kg_fused(cached, alias, partitions=cores).collect())
+        assert rows == sorted(build_kg_fused(cached.coalesce(1), alias).collect())
     finally:
         cached.unpersist()

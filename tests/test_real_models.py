@@ -129,7 +129,7 @@ class TestRealTorchBackend:
 
         backend = self._tiny_backend(tmp_path)
         linked = build_kg_fused(
-            _transcripts(spark), alias_dict(spark), partitions=2,
+            _transcripts(spark).repartition(2, "conv_id"), alias_dict(spark),
             backend=backend,
         )
         rows = linked.collect()
@@ -141,7 +141,7 @@ class TestRealTorchBackend:
         }
         assert all(0.0 < r.confidence <= 1.0 for r in rows)
         again = build_kg_fused(
-            _transcripts(spark), alias_dict(spark), partitions=1,
+            _transcripts(spark).coalesce(1), alias_dict(spark),
             backend=backend,
         ).collect()
         assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
